@@ -105,6 +105,30 @@ def test_frontier_delta_is_touched_rows_only(spark, crawl_run):
         assert len(rows) >= n_sched
 
 
+def _check_telemetry(tele, must_have):
+    """Sections partition the epoch's jobs and stages, and their walls fit
+    inside the epoch's wall."""
+    secs = tele["sections"]
+    assert set(must_have) <= secs.keys(), sorted(secs)
+    assert sum(s["jobs"] for s in secs.values()) == tele["jobs"]
+    assert sum(s["stages"] for s in secs.values()) == tele["stages"]
+    assert sum(s["wall_seconds"] for s in secs.values()) <= tele["wall_seconds"] + 1e-6
+
+
+def test_epoch_telemetry_sections(crawl_run):
+    """A plain run_epochs call (no env var, no benchmark) records per-section
+    wall, jobs and stages; none of it reaches the manifest."""
+    cat, counters = crawl_run
+    for c in counters:
+        tele = c["_telemetry"]
+        assert tele["jobs"] > 0 and tele["stages"] >= tele["jobs"]
+        _check_telemetry(tele, ("read_state", "ingest", "schedule", "stage_writes", "commit"))
+        walls = tele["sections"]["stage_writes"]["table_wall_seconds"]
+        assert {"seen", "frontier", "schedule"} <= walls.keys()
+    for e in cat.read_manifest()["epochs"]:
+        assert not {"_telemetry", "sections"} & e["counters"].keys()
+
+
 def test_resume_round_trip(spark, pages_df, seeds_df, robots_df, tmp_path_factory, crawl_run):
     """Run 0..2 in one go vs run 0..1, reopen catalog, run 2 — identical."""
     cat_full, _ = crawl_run
@@ -576,6 +600,10 @@ def test_all_optin_features_compose(spark, pages_df, seeds_df, robots_df, tmp_pa
         root = tmp_path_factory.mktemp(tag)
         cat = Catalog(spark, str(root))
         counters = E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 3, cfg)
+        # maintenance is telemetry sections too (compact_every=2: epoch 1)
+        for c in counters:
+            _check_telemetry(c["_telemetry"], ("ingest", "mine_mirrors", "mine_dust"))
+        assert "compact" in counters[1]["_telemetry"]["sections"]
         # _telemetry (wall clock, scheduler ids) is explicitly non-semantic;
         # everything else must be a deterministic function of the inputs
         counters = [

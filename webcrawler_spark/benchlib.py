@@ -1,393 +1,11 @@
-"""Frontier-bench workload, shared by the in-session bench harness
-(``bench.py``) and the spark-submit scaling children
-(``scripts/run_frontier_bench.py``).
+"""RDD-block bookkeeping under the names ``perfbench/workloads.py`` imports.
 
-Lives inside the package so the scaling evidence can run in the
-north-rule deployment shape — ``spark-submit --py-files
-webcrawler_spark.zip`` from a clean directory, where only the zip is
-importable. The workload is the north-rule metric: URLs canonicalized +
-deduped + politeness-scheduled per second over a skewed synthetic
-frontier generated entirely JVM-side (no Python in the data path except
-the vectorized canonicalize UDF — the real hot path).
+This module exists only for that import: the implementation lives in
+``plans/epoch.py``, which frees each epoch's checkpoint blocks the same way
+the benchmark frees each batch's.
 """
 
-from __future__ import annotations
+from .plans.epoch import _free_epoch_blocks as _unpersist_new_rdds
+from .plans.epoch import _persistent_rdd_ids
 
-import time
-
-
-def _stat_snap():
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    return sum(vals), vals[3] + vals[4]  # total jiffies, idle+iowait
-
-
-def sys_busy_cores_over(t0_snap, t1_snap, ncpu: int) -> float:
-    """Whole-box average busy cores between two /proc/stat snapshots
-    (includes our own work — a trial on an otherwise-idle box reports ~its
-    own core budget; anything well above that is co-tenant contention)."""
-    dt = t1_snap[0] - t0_snap[0]
-    di = t1_snap[1] - t0_snap[1]
-    return (1 - di / dt) * ncpu if dt else 0.0
-
-
-def synth_frontier(
-    spark,
-    n_urls: int,
-    n_hosts: int = 1000,
-    hot_hosts: int = 3,
-    hot_frac: float = 0.3,
-):
-    """Skewed synthetic URL frontier, generated entirely JVM-side:
-    ``hot_frac`` of URLs land on ``hot_hosts`` hot hosts (default ~30% on 3
-    — the skew the salted top-k handles; the skew-stress bench uses 50% on
-    1); URL variants embed normalization traps (utm params, case, ports,
-    trailing slashes) so the canonicalize UDF does real work."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(n_urls)
-    # modulus must exceed any realistic n_hosts: pmod(h, n_hosts-hot) can
-    # only reach min(modulus, n_hosts) distinct cold hosts, and the
-    # adaptive-salt scenario needs ~10^5-10^6 cold hosts
-    h = F.pmod(F.xxhash64("id"), F.lit(1_000_000))
-    host_id = F.when(
-        h < int(hot_frac * 1_000_000), F.pmod(h, F.lit(hot_hosts))
-    ).otherwise(F.pmod(h, F.lit(n_hosts - hot_hosts)) + hot_hosts)
-    variant = F.pmod(F.xxhash64("id", F.lit(7)), F.lit(5))
-    base = F.concat(
-        F.lit("https://site"), host_id.cast("string"), F.lit(".com/page-"),
-        F.col("id").cast("string"),
-    )
-    url = (
-        F.when(variant == 0, F.concat(base, F.lit("?utm_source=bench&id=1")))
-        .when(variant == 1, F.concat(base, F.lit("/")))
-        .when(variant == 2, F.upper(base))
-        .when(variant == 3, F.regexp_replace(base, "\\.com/", ".com:443/"))
-        .otherwise(base)
-    )
-    return df.select(
-        url.alias("url"),
-        F.lit(None).cast("string").alias("source_url"),
-        F.pmod(F.xxhash64("id", F.lit(13)), F.lit(5)).cast("int").alias("depth"),
-        F.pmod(F.xxhash64("id", F.lit(17)), F.lit(20)).cast("int").alias("source_priority"),
-    )
-
-
-def _persistent_rdd_ids(spark) -> set:
-    try:
-        return {
-            e.getKey()
-            for e in spark.sparkContext._jsc.getPersistentRDDs().entrySet().toArray()
-        }
-    except Exception:
-        return set()
-
-
-def _unpersist_new_rdds(spark, pre_ids: set) -> None:
-    """Free RDDs cached since ``pre_ids`` was snapshotted (the eager
-    localCheckpoint a timed trial made) — without this, best-of-2 trials
-    and the looping scaling children run each trial with the previous
-    trial's full-width checkpointed pool still occupying storage memory."""
-    try:
-        for e in spark.sparkContext._jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() not in pre_ids:
-                e.getValue().unpersist(False)
-    except Exception:
-        pass
-
-
-def plan_shuffle_bytes(df) -> dict | None:
-    """Sum shuffle write/read bytes over an EXECUTED DataFrame's physical
-    plan (SQLMetrics walk, AQE query stages included; ReusedExchange nodes
-    skipped so a reused shuffle counts once). This is the skew bench's
-    exchange-volume evidence: adaptive salting's claim is that its second
-    exchange carries hot survivors only, and that claim needs a measured
-    byte count next to the wall/busy numbers. Returns None if the internal
-    plan API is unreachable (telemetry only, never load-bearing)."""
-    try:
-        seen: set[int] = set()
-        tot = {"w": 0, "r": 0}
-
-        def walk(node):
-            nid = node.id()
-            if nid in seen:
-                return
-            seen.add(nid)
-            if not node.nodeName().startswith("ReusedExchange"):
-                it = node.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    k = kv._1()
-                    if k == "shuffleBytesWritten":
-                        tot["w"] += kv._2().value()
-                    elif k in ("localBytesRead", "remoteBytesRead"):
-                        tot["r"] += kv._2().value()
-            ch = node.children()
-            for i in range(ch.size()):
-                walk(ch.apply(i))
-            for sub in ("executedPlan", "plan"):
-                try:
-                    walk(getattr(node, sub)())
-                    break
-                except Exception:
-                    pass
-
-        walk(df._jdf.queryExecution().executedPlan())
-        return {
-            "shuffle_write_bytes": int(tot["w"]),
-            "shuffle_read_bytes": int(tot["r"]),
-        }
-    except Exception:
-        return None
-
-
-def skew_schedule_bench(
-    spark,
-    n_pending: int,
-    salt: int,
-    hot_hosts: int = 1,
-    hot_frac: float = 0.5,
-    n_hosts: int = 1000,
-    adaptive: bool = False,
-) -> dict:
-    """Skew stress of the politeness-scheduling stage alone, at a pending
-    pool size where the hot host's single-task window sort DOMINATES the
-    stage on any box.
-
-    The pending pool is synthesized directly JVM-side (url_norm = url,
-    url_fp = xxhash64) — canonicalize/dedup are irrelevant to the stage
-    under test and synthesizing them let the whole-pipeline variant afford
-    only 8M rows, where a quiet box sorts the 2M hot rows in ~2-3 s and
-    the arms tie within noise. At 16M+ rows (8M on the hot host) the
-    unsalted straggler is unambiguous regardless of ambient regime.
-    Setup (generation + persist) is untimed; the timed region is
-    schedule_epoch + the schedule/deferred count."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from webcrawler_spark.config import CrawlConfig
-    from webcrawler_spark.operators import scheduler as S
-
-    cfg = CrawlConfig(epoch_seconds=60, hot_host_salt=salt, adaptive_salt=adaptive)
-    df = spark.range(n_pending)
-    h = F.pmod(F.xxhash64("id"), F.lit(1_000_000))
-    host_id = F.when(
-        h < int(hot_frac * 1_000_000), F.pmod(h, F.lit(hot_hosts))
-    ).otherwise(F.pmod(h, F.lit(n_hosts - hot_hosts)) + hot_hosts)
-    host = F.concat(F.lit("site"), host_id.cast("string"), F.lit(".com"))
-    url = F.concat(F.lit("https://"), host, F.lit("/page-"), F.col("id").cast("string"))
-    pending = df.select(
-        url.alias("url"),
-        url.alias("url_norm"),
-        F.xxhash64("id").alias("url_fp"),
-        host.alias("host"),
-        F.concat(F.lit("/page-"), F.col("id").cast("string")).alias("path"),
-        F.pmod(F.xxhash64("id", F.lit(17)), F.lit(20)).cast("int").alias("priority"),
-        F.pmod(F.xxhash64("id", F.lit(13)), F.lit(5)).cast("int").alias("depth"),
-        F.lit(None).cast("string").alias("source_url"),
-        F.lit(0).alias("discovered_epoch"),
-        F.lit(0).alias("attempts"),
-    ).persist()
-    pending.count()
-    try:
-        stat0 = _stat_snap()
-    except OSError:
-        stat0 = None
-    t0 = _t.time()
-    # NO ranked materialization here (unlike the production epoch driver,
-    # which localCheckpoints the frame for its many consumers): storing the
-    # full 24M-row ranked pool would add a uniform ~page-store bandwidth
-    # term to every arm and drown the window contrast this block exists to
-    # measure. The counts union instead evaluates the windowed plan once
-    # per arm — a uniform 2x on the stage under test, identical across
-    # salt arms, and the straggler signal stays isolated.
-    schedule, deferred, rejected = S.schedule_epoch(pending, None, None, 0, cfg)
-    counts_df = (
-        schedule.select(F.lit("s").alias("st"))
-        .unionAll(deferred.select(F.lit("d").alias("st")))
-        .groupBy("st")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    counts = {r["st"]: r["n"] for r in counts_df.collect()}
-    elapsed = _t.time() - t0
-    busy = None
-    if stat0 is not None:
-        try:
-            import os as _os
-
-            busy = round(
-                sys_busy_cores_over(stat0, _stat_snap(), _os.cpu_count() or 1), 2
-            )
-        except OSError:
-            pass
-    # untimed: exchange volumes of the arm just executed (the straggler
-    # argument's second axis — adaptive salting trades wall for exchange
-    # bytes, and SCALE.md §4's extrapolation needs this measured anchor)
-    xbytes = plan_shuffle_bytes(counts_df)
-    pending.unpersist()
-    out = {
-        "n_pending": n_pending,
-        "timed_stage": "schedule",
-        "salt": salt,
-        "n_scheduled": counts.get("s", 0),
-        "n_deferred": counts.get("d", 0),
-        "seconds": round(elapsed, 3),
-        "urls_per_sec": round(n_pending / elapsed, 1),
-        "sys_busy_avg": busy,
-    }
-    if xbytes is not None:
-        out.update(xbytes)
-    return out
-
-
-def frontier_bench(
-    spark,
-    n_urls: int,
-    salt: int | None = None,
-    hot_hosts: int = 3,
-    hot_frac: float = 0.3,
-    n_hosts: int = 1000,
-    adaptive: bool = False,
-    schedule_only: bool = False,
-) -> dict:
-    """Timed: canonicalize -> fingerprint -> anti-join dedup -> priority ->
-    politeness schedule -> count. Returns urls/sec.
-
-    ``salt``/``hot_hosts``/``hot_frac`` parameterize the skew-stress
-    variant (50% of URLs on ONE host, salting on vs off); defaults are the
-    standard north-rule frontier.
-
-    ``schedule_only``: move canonicalize+dedup+priority into untimed setup
-    (pending pool pre-materialized) so the timed region is ONLY the
-    politeness-scheduling stage. That is the stage hot-host salting exists
-    for — the upstream canonicalize UDF is uniformly parallel regardless of
-    skew, and with it in the timed window the straggler it masks is the
-    whole point of the measurement (the r4 skew block recorded speedup
-    ~0.95 for exactly this reason)."""
-    from pyspark.sql import functions as F
-
-    import os as _os_cfg
-
-    from webcrawler_spark.config import CrawlConfig
-    from webcrawler_spark.functions import columns as C
-    from webcrawler_spark.operators import dedup as D
-    from webcrawler_spark.operators import scheduler as S
-
-    # salt knob: 3 hot hosts hold 30% of an n-URL frontier, so each
-    # (host, salt) sort group sees ~0.1*n/salt rows vs ~n/1000 for a cold
-    # host — the pre-rank window's straggler tail scales down with salt
-    if salt is None:
-        salt = int(_os_cfg.environ.get("SPARK_GRAFT_BENCH_SALT", "8"))
-    # adaptive: salt only hosts measured above hot_host_threshold this
-    # epoch (cold hosts finalize in the pre-window; the second exchange
-    # carries hot survivors only)
-    cfg = CrawlConfig(
-        epoch_seconds=60, hot_host_salt=salt, adaptive_salt=adaptive
-    )
-
-    # seen set: first half of the id space, canonical fps (setup, untimed)
-    seen = (
-        D.canonicalize(synth_frontier(spark, n_urls // 2, hot_hosts=hot_hosts,
-                                      hot_frac=hot_frac, n_hosts=n_hosts))
-        .select("url_fp")
-        .persist()
-    )
-    seen.count()
-
-    candidates = synth_frontier(
-        spark, n_urls, hot_hosts=hot_hosts, hot_frac=hot_frac, n_hosts=n_hosts
-    )
-    import os as _os
-
-    def _build_pending():
-        canon = D.canonicalize(candidates)
-        merged = D.merge_candidates(canon)
-        new = D.dedupe_new_urls(merged, seen)
-        return (
-            new.withColumn(
-                "priority",
-                C.url_priority(
-                    F.col("url_norm"), F.col("depth"), F.col("source_priority")
-                ),
-            )
-            .withColumn("discovered_epoch", F.lit(0))
-            .withColumn("attempts", F.lit(0))
-            .drop("source_priority")
-        )
-
-    if schedule_only:
-        # skew-stress shape: the pending pool is setup; ONLY the
-        # politeness-scheduling stage (the salted/unsalted window) is timed
-        pending = _build_pending().persist()
-        pending.count()
-    _pre_rdds = _persistent_rdd_ids(spark)
-    try:
-        stat0 = _stat_snap()
-    except OSError:
-        stat0 = None
-    t0 = time.time()
-    if not schedule_only:
-        # materialize the frontier once: the schedule/deferred/rejected split
-        # re-reads the cached rows instead of re-running canonicalize+dedup
-        # per union branch (Spark does not reuse exchanges across union arms
-        # here) — epoch.py does the same with its pending materialization
-        pending = _build_pending().persist()
-    # the production epoch driver materializes the shared ranked frame so
-    # the politeness windows execute once (schedule/deferred are filters of
-    # it); the bench runs the same plan the deploy runs
-    schedule, deferred, rejected = S.schedule_epoch(
-        pending, None, None, 0, cfg,
-        materialize=lambda df: df.localCheckpoint(eager=True),
-    )
-    counts = {
-        r["st"]: r["n"]
-        for r in schedule.select(F.lit("s").alias("st"))
-        .unionAll(deferred.select(F.lit("d").alias("st")))
-        .groupBy("st")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_scheduled = counts.get("s", 0)
-    n_deferred = counts.get("d", 0)
-    elapsed = time.time() - t0
-    # whole-box busy-cores average over the timed window: the contention
-    # audit trail for the scaling trials (bursty co-tenant load arrives
-    # MID-trial; a pre-trial check alone cannot see it)
-    busy = None
-    if stat0 is not None:
-        try:
-            busy = round(
-                sys_busy_cores_over(stat0, _stat_snap(), _os.cpu_count() or 1), 2
-            )
-        except OSError:
-            pass
-    # stage throughput context: the rows the politeness windows actually
-    # processed (post-dedup pool). Cached count, untimed (after `elapsed`).
-    n_pending = pending.count() if schedule_only else None
-    pending.unpersist()
-    seen.unpersist()
-    # free the ranked frame's eager localCheckpoint (the production-plan
-    # materialization schedule_epoch made inside the timed region)
-    _unpersist_new_rdds(spark, _pre_rdds)
-    # schedule_only times ONLY the politeness stage over the ~n_urls/2
-    # post-dedup pending rows, so its rate divides by n_pending — the same
-    # metric skew_schedule_bench reports, keeping the two schedule-stage
-    # benches comparable. The full pipeline divides by the URLs ingested.
-    rate_rows = n_pending if schedule_only else n_urls
-    return {
-        "n_urls": n_urls,
-        "timed_stage": "schedule" if schedule_only else "full",
-        "salt": salt,
-        "n_scheduled": n_scheduled,
-        "n_deferred": n_deferred,
-        "n_pending": n_pending,
-        "seconds": round(elapsed, 3),
-        "urls_per_sec": round(rate_rows / elapsed, 1),
-        "sys_busy_avg": busy,
-        # wall-clock window of the TIMED region (same machine clock for all
-        # children): lets the concurrent lo∥hi scaling design align the hi
-        # child's looped trials with the lo child's single timed window
-        "t_start": round(t0, 3),
-        "t_end": round(t0 + elapsed, 3),
-    }
+__all__ = ["_persistent_rdd_ids", "_unpersist_new_rdds"]

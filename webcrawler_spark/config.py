@@ -202,9 +202,8 @@ class CrawlConfig:
 DEFAULT_CONFIG = CrawlConfig()
 
 # Every beyond-reference opt-in at once — the configuration a 100-TB deploy
-# would actually run, and the bench's `crawl_optins` block. ONE definition so
-# the bench child, the in-session fallback, and the per-flag profiler can
-# never drift apart.
+# would actually run, and the one the benchmark's `crawl_full` workload
+# crawls with (via all_optins_config).
 ALL_OPTINS: dict = dict(
     use_bloom=True,
     cluster_by_surt=True,
@@ -228,7 +227,7 @@ ALL_OPTINS: dict = dict(
 
 
 def all_optins_config(**overrides) -> CrawlConfig:
-    """CrawlConfig with every opt-in enabled (bench parity defaults:
+    """CrawlConfig with every opt-in enabled (benchmark defaults:
     epoch_seconds=600, hot_host_salt=4) plus any overrides."""
     base = dict(epoch_seconds=600, hot_host_salt=4, **ALL_OPTINS)
     base.update(overrides)

@@ -15,6 +15,8 @@ the tests diff them epoch by epoch.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
@@ -210,28 +212,57 @@ def apply_global_budget(
     return kept.drop(*drop), bumped
 
 
-class _SectionTimer:
-    """Wall-clock attribution of run_epoch's phases (opt-in via
-    SPARK_GRAFT_EPOCH_TIMING=1; the counters grow a 'sections' dict).
-    With the eager localCheckpoint materialization below, each section's
-    wall includes its own execution, so the split is meaningful — this is
-    how the all-opt-ins bench blow-ups get attributed from the artifact."""
+class _Telemetry:
+    """Always-on epoch telemetry: the wall plus the Spark jobs and stages
+    submitted in each named section. ``mark(name)`` closes the section
+    running since the previous mark; a name marked twice accumulates.
 
-    def __init__(self) -> None:
-        import os as _os
-        import time as _time
+    Jobs and stages are the difference of the DAG scheduler's
+    ``nextJobId``/``nextStageId`` counters between marks, so recording
+    submits no Spark job. With the eager localCheckpoint materialization
+    below, each section's wall includes its own execution. The record is
+    non-semantic (wall clock, scheduler ids): the epoch driver adds it to
+    the counters under ``_telemetry`` only after the manifest commit."""
 
-        self.enabled = _os.environ.get("SPARK_GRAFT_EPOCH_TIMING") == "1"
-        self._time = _time
-        self.t: dict[str, float] = {}
-        self._last = _time.time()
+    def __init__(self, spark: SparkSession) -> None:
+        self._sc = spark.sparkContext
+        self.sections: dict[str, dict] = {}
+        self._t0 = self._t = time.perf_counter()
+        self._ids0 = self._ids = self._sched_ids()
 
-    def mark(self, name: str) -> None:
-        if not self.enabled:
-            return
-        now = self._time.time()
-        self.t[name] = round(self.t.get(name, 0.0) + (now - self._last), 3)
-        self._last = now
+    def _sched_ids(self) -> tuple[int, int] | None:
+        try:
+            dag = self._sc._jsc.sc().dagScheduler()
+            return int(dag.nextJobId()), int(dag.nextStageId())
+        except Exception:
+            return None
+
+    def mark(self, name: str) -> dict:
+        t, ids = time.perf_counter(), self._sched_ids()
+        sec = self.sections.setdefault(name, {"wall_seconds": 0.0})
+        sec["wall_seconds"] += t - self._t
+        if ids is not None and self._ids is not None:
+            sec["jobs"] = sec.get("jobs", 0) + ids[0] - self._ids[0]
+            sec["stages"] = sec.get("stages", 0) + ids[1] - self._ids[1]
+        self._t, self._ids = t, ids
+        return sec
+
+    def adopt(self, sections: dict) -> None:
+        """Take over the sections an inner recorder marked since this one's
+        last mark (run_epoch's, inside run_epochs)."""
+        self.sections.update(sections)
+        self._t, self._ids = time.perf_counter(), self._sched_ids()
+
+    def record(self) -> dict:
+        """Wall, jobs and stages since the recorder started, plus the
+        per-section breakdown."""
+        tele = {"wall_seconds": time.perf_counter() - self._t0}
+        ids = self._sched_ids()
+        if ids is not None and self._ids0 is not None:
+            tele["jobs"] = ids[0] - self._ids0[0]
+            tele["stages"] = ids[1] - self._ids0[1]
+        tele["sections"] = self.sections
+        return tele
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -262,6 +293,10 @@ def _persistent_rdd_entries(spark: SparkSession):
         return []
 
 
+def _persistent_rdd_ids(spark: SparkSession) -> set:
+    return {e.getKey() for e in _persistent_rdd_entries(spark)}
+
+
 def _unpersist_ids(spark: SparkSession, ids: set) -> None:
     if not ids:
         return
@@ -281,9 +316,9 @@ def _checkpoint_dim(spark: SparkSession, df: DataFrame, prev_ids: set):
     same lazy frame; without the id bookkeeping each re-mine would leak
     one (small) checkpointed dim per epoch for the life of the crawl.
     Returns (checkpointed_df, its_rdd_ids)."""
-    pre = {e.getKey() for e in _persistent_rdd_entries(spark)}
+    pre = _persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=True)
-    new_ids = {e.getKey() for e in _persistent_rdd_entries(spark)} - pre
+    new_ids = _persistent_rdd_ids(spark) - pre
     _unpersist_ids(spark, prev_ids)
     return out, new_ids
 
@@ -334,8 +369,8 @@ def run_epoch(
     cfg.epoch_seconds) instead of the optimistic fastest band; measured
     change rates take over from the second fetch. No-op without
     cfg.recrawl; None = exact prior behavior."""
-    sec = _SectionTimer()
-    _pre_rdd_ids = {e.getKey() for e in _persistent_rdd_entries(spark)}
+    tele = _Telemetry(spark)
+    _pre_rdd_ids = _persistent_rdd_ids(spark)
     prev = epoch - 1
     seen_prev = cat.read_delta_union("seen", prev)
     deferred_prev = cat.read_snapshot("deferred", prev)
@@ -364,7 +399,7 @@ def run_epoch(
             candidates = L.discovered_candidates(links_prev, cfg)
         else:
             candidates = spark.createDataFrame([], _CAND_SCHEMA)
-    sec.mark("read_state")
+    tele.mark("read_state")
 
     # materialized once: consumed by the pending pool, the frontier snapshot
     # AND the seen delta — without the materialization each consumer re-runs
@@ -376,7 +411,7 @@ def run_epoch(
             dust_rules=dust_rules,
         )
     )
-    sec.mark("ingest")
+    tele.mark("ingest")
 
     # ---- 2. pending = new rows ∪ ready deferred
     #
@@ -408,7 +443,7 @@ def run_epoch(
     # pending feeds three outputs (schedule/deferred/rejected); materialize
     # so the scheduling windows re-read cached rows instead of re-ingesting
     pending = _materialize(pending)
-    sec.mark("pending")
+    tele.mark("pending")
 
     # ---- 2b/2c. host-level budget gates (opt-in): crawl-trap suspects AND
     # mirror-loser hosts leave the pool before politeness spends budget on
@@ -455,7 +490,7 @@ def run_epoch(
             F.broadcast(gate_hosts), "_gh", "left_semi"
         ).drop("_gh")
         pending = keyed.join(F.broadcast(gate_hosts), "_gh", "left_anti").drop("_gh")
-    sec.mark("traps")
+    tele.mark("traps")
 
     schedule, deferred_new, rejected = S.schedule_epoch(
         pending, robots, host_stats_prev, epoch, cfg, materialize=_materialize
@@ -483,11 +518,11 @@ def run_epoch(
     # writes were ~50% of the all-opt-ins epoch wall). rejected rides the
     # same frontier arm but is a cheap filter over materialized pending.
     deferred_new = _materialize(deferred_new)
-    sec.mark("schedule")
+    tele.mark("schedule")
 
     # ---- 4. "fetch" = equi join against the page table (J5 replaces S10 HTTP)
     fetched = _materialize(schedule.join(pages_prepared, "url_norm", "left"))
-    sec.mark("fetch")
+    tele.mark("fetch")
     ok = fetched.filter(F.col("html").isNotNull())
 
     if verify_extraction:
@@ -531,7 +566,7 @@ def run_epoch(
         )
         soft404_dropped = s4_drop.count()
         ok = ok.join(s4_drop, "url_norm", "left_anti")
-    sec.mark("soft404")
+    tele.mark("soft404")
 
     # ---- 5. parse: links (F16/P2-P4/U2) + docs (F7/F11/F14/F15)
     pages_for_links = ok
@@ -801,7 +836,7 @@ def run_epoch(
         ).withColumn("epoch", F.lit(epoch))
     if recrawl_state is not None:
         to_stage["recrawl_state"] = recrawl_state
-    sec.mark("plan_outputs")
+    tele.mark("plan_outputs")
     web_delta_persisted = False
     if cfg.build_index:
         # the ES bulk-index analog (S12): this epoch's indexed docs become a
@@ -846,14 +881,12 @@ def run_epoch(
     write_secs: dict[str, float] = {}
 
     def _timed_stage(t: str, df: DataFrame) -> int:
-        import time as _t
-
-        t0 = _t.time()
+        t0 = time.perf_counter()
         n = cat.stage(
             t, epoch, df, None, sort_within.get(t),
             tuple(c for c in stats_for.get(t, ()) if c in df.columns),
         )
-        write_secs[t] = round(_t.time() - t0, 3)
+        write_secs[t] = time.perf_counter() - t0
         return n
 
     with ThreadPoolExecutor(max_workers=len(to_stage)) as pool:
@@ -871,17 +904,16 @@ def run_epoch(
         "pages_fetched": counts["web_content"],
         "links_discovered": counts["links"],
     }
-    sec.mark("stage_writes")
+    # per-table write walls (concurrent — they overlap; the max is the
+    # stage_writes critical path, the sum is the scheduler pressure)
+    tele.mark("stage_writes")["table_wall_seconds"] = write_secs
     if cfg.detect_soft404:
         counters["soft404_dropped"] = soft404_dropped
     cat.commit_epoch(epoch, counts, counters)
     _free_epoch_blocks(spark, _pre_rdd_ids)
-    sec.mark("commit")
-    if sec.enabled:
-        counters["sections"] = sec.t
-        # per-table write walls (concurrent — they overlap; the max is the
-        # stage_writes critical path, the sum is the scheduler pressure)
-        counters["sections"]["writes"] = write_secs
+    tele.mark("commit")
+    # after the commit: the manifest persists only the semantic counters
+    counters["_telemetry"] = tele.record()
     return counters
 
 
@@ -944,12 +976,12 @@ def run_epochs(
     lets the bench keep page prep as untimed setup while still driving THIS
     loop, maintenance included, instead of a hand-rolled copy of it.
 
-    Each returned counters dict additionally carries per-epoch telemetry
-    (post-commit, never in the manifest): ``wall_seconds`` and — where the
-    scheduler's id counters are reachable — ``jobs``/``stages`` submitted
-    during the epoch (maintenance included)."""
-    import time as _time
-
+    Each returned counters dict additionally carries the epoch's
+    telemetry under ``_telemetry`` (post-commit, never in the manifest):
+    ``wall_seconds`` and — where the scheduler's id counters are reachable
+    — ``jobs``/``stages`` submitted during the epoch, maintenance included,
+    and ``sections``, the same three figures per section: run_epoch's
+    sections, then ``mine_mirrors``, ``mine_dust`` and ``compact``."""
     owns_pages = pages_prepared is None
     if owns_pages:
         pages_prepared = prepare_pages(pages).persist()
@@ -975,31 +1007,23 @@ def run_epochs(
         if mined is not None:
             mirror_dim, mirror_ids = _checkpoint_dim(spark, mined, mirror_ids)
 
-    def _sched_ids() -> tuple[int | None, int | None]:
-        try:
-            dag = spark.sparkContext._jsc.sc().dagScheduler()
-            return int(dag.nextJobId()), int(dag.nextStageId())
-        except Exception:
-            return None, None
-
     for epoch in range(start, start + n_epochs):
-        t_e = _time.time()
-        j0, s0 = _sched_ids()
-        out.append(
-            run_epoch(
-                spark,
-                cat,
-                pages_prepared,
-                robots,
-                epoch,
-                cfg,
-                seeds=seeds if epoch == 0 else None,
-                verify_extraction=verify_extraction,
-                sitemap_hints=sitemap_hints,
-                dust_rules=dust_rules,
-                mirror_loser_hosts=mirror_dim,
-            )
+        tele = _Telemetry(spark)
+        counters = run_epoch(
+            spark,
+            cat,
+            pages_prepared,
+            robots,
+            epoch,
+            cfg,
+            seeds=seeds if epoch == 0 else None,
+            verify_extraction=verify_extraction,
+            sitemap_hints=sitemap_hints,
+            dust_rules=dust_rules,
+            mirror_loser_hosts=mirror_dim,
         )
+        tele.adopt(counters.pop("_telemetry")["sections"])
+        out.append(counters)
         if cfg.collapse_mirrors:
             # re-mine from ALL accumulated evidence; the dim engages next
             # epoch (same cadence discipline as DUST below). Checkpointed
@@ -1008,7 +1032,8 @@ def run_epochs(
             mined = _mine_mirror_losers(cat, epoch, cfg)
             if mined is not None:
                 mirror_dim, mirror_ids = _checkpoint_dim(spark, mined, mirror_ids)
-                out[-1]["mirror_loser_hosts"] = mirror_dim.count()
+                counters["mirror_loser_hosts"] = mirror_dim.count()
+            tele.mark("mine_mirrors")
         if cfg.mine_dust:
             # re-mine from ALL accumulated evidence (fetch_digests deltas);
             # at 10^10 this job is two hash-aggs over (url_norm, content_
@@ -1018,7 +1043,8 @@ def run_epochs(
             mined = _mine_dust_rules(cat, epoch, cfg)
             if mined is not None:
                 dust_rules, dust_ids = _checkpoint_dim(spark, mined, dust_ids)
-                out[-1]["dust_rule_hosts"] = dust_rules.count()
+                counters["dust_rule_hosts"] = dust_rules.count()
+            tele.mark("mine_dust")
         # periodic delta compaction (Iceberg rewrite_data_files cadence):
         # the seen/links unions otherwise read one directory per prior epoch;
         # the frontier (merge table) additionally re-resolves superseded
@@ -1032,18 +1058,14 @@ def run_epochs(
             if cfg.mine_dust or cfg.collapse_mirrors:
                 tables.append("fetch_digests")
             for table in tables:
-                out[-1].setdefault("maintenance", {})[f"compact_{table}"] = (
+                counters.setdefault("maintenance", {})[f"compact_{table}"] = (
                     cat.compact_delta(table, epoch)
                 )
-        j1, s1 = _sched_ids()
+            tele.mark("compact")
         # non-semantic telemetry under ONE underscore key: the crawl's
         # counters are a deterministic function of the inputs (pinned by the
         # two-run compose test); wall clock and scheduler ids are not
-        tele = {"wall_seconds": round(_time.time() - t_e, 3)}
-        if j0 is not None and j1 is not None:
-            tele["jobs"] = j1 - j0
-            tele["stages"] = s1 - s0
-        out[-1]["_telemetry"] = tele
+        counters["_telemetry"] = tele.record()
     if owns_pages:
         pages_prepared.unpersist()
     _unpersist_ids(spark, dust_ids | mirror_ids)

@@ -12,21 +12,15 @@ from pyspark.sql import SparkSession
 
 
 def session_confs(shuffle_partitions: int) -> dict[str, str]:
-    """The workload's Spark conf block, as a dict so the spark-submit
-    launcher (``bench.py`` scaling children, cluster deploys) can pass the
-    exact same settings as ``--conf`` flags that ``get_spark`` applies
-    in-process."""
+    """The workload's Spark conf block, as a dict so a spark-submit
+    launcher (cluster deploys) can pass the exact same settings as
+    ``--conf`` flags that ``get_spark`` applies in-process."""
     confs = {
         # Arrow for every pandas-UDF crossing (the only JVM↔Python boundary)
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # AQE: runtime coalesce + skew-join splitting for hot hosts
-        # (SPARK_GRAFT_DISABLE_AQE=1 turns it off — experiment knob: with
-        # AQE every exchange materializes as its own job, which dominates
-        # fixed-overhead-bound workloads at bench scale)
-        "spark.sql.adaptive.enabled": (
-            "false" if os.environ.get("SPARK_GRAFT_DISABLE_AQE") == "1" else "true"
-        ),
+        "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # runtime bloom filters on shuffle joins (Catalyst-injected)

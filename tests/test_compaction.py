@@ -12,13 +12,17 @@ Invariants:
 - expiry without a covering compaction is refused.
 """
 
+import json
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from webcrawler_spark.config import CrawlConfig
 from webcrawler_spark.oracle import run_oracle
 from webcrawler_spark.plans import epoch as E
-from webcrawler_spark.storage.catalog import Catalog
+from webcrawler_spark.storage.catalog import DELTA_TABLES, MERGE_TABLES, Catalog
 
 CFG = CrawlConfig(epoch_seconds=6, hot_host_salt=2)
 
@@ -106,9 +110,10 @@ def test_expiry_semantics(compact_cat):
     # time travel BELOW the boundary still works: the base keeps each row's
     # lineage epoch, so the read filters the compacted base
     assert _seen_rows(cat, 0) == epoch0_rows
-    # ...but the raw-partition path (used to build new compactions) refuses
+    # ...but a new compaction below the boundary (built from the raw
+    # partitions) refuses
     with pytest.raises(ValueError, match="expired"):
-        cat._read_delta_raw("seen", 0)
+        cat.compact_delta("seen", 0)
 
 
 def test_expire_without_compaction_refused(spark, tmp_path_factory):
@@ -312,3 +317,80 @@ def test_postings_compaction_identity(spark, pages_df, seeds_df, robots_df, tmp_
     # time travel below the compaction point still filters on the lineage col
     early = cat_c.read_delta_union("postings", 1)
     assert {r["crawled_epoch"] for r in early.select("crawled_epoch").distinct().collect()} <= {0, 1}
+
+
+def _jobs_submitted(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_catalog_reads_submit_no_job(spark, compact_cat):
+    """The manifest holds every table's schema, so building a read opens no
+    parquet footer: no Spark job runs until the caller's own action — on
+    a compacted table, a time-travel read and a merge table alike."""
+    cat, _ = compact_cat
+    last = cat.last_committed_epoch()
+    assert set(cat.read_manifest()["schemas"]) >= {"seen", "frontier", "deferred"}
+    j0 = _jobs_submitted(spark)
+    reads = [
+        cat.read_delta_union("seen", last),
+        cat.read_delta_union("seen", 1),
+        cat.read_snapshot("deferred", last),
+        cat.read_merged("frontier", last),
+        cat.read_incremental("frontier", 1, last),
+        cat.read_delta_pruned("frontier", last, "url_fp", 0, 2**62),
+    ]
+    assert _jobs_submitted(spark) == j0
+    assert all(r is not None for r in reads)
+
+
+def _assert_pinned_reads_match_inference(spark, cat):
+    """Every committed table's catalog read equals a footer-inferred
+    ``spark.read.parquet`` of the same files, in schema and in rows."""
+    manifest = cat.read_manifest()
+    last = manifest["epochs"][-1]["epoch"]
+    tables = {t for e in manifest["epochs"] for t in e["tables"]}
+    assert {"seen", "links", "frontier", "web_content", "deferred"} <= tables
+    for t in sorted(tables):
+        if t in DELTA_TABLES | MERGE_TABLES:
+            pinned = cat.read_delta_union(t, last)
+        else:
+            pinned = cat.read_snapshot(t, last)
+        inferred = spark.read.parquet(*pinned.inputFiles())
+        assert pinned.schema == inferred.schema, t
+        assert pinned.exceptAll(inferred).isEmpty(), t
+        assert inferred.exceptAll(pinned).isEmpty(), t
+
+
+def test_pinned_reads_equal_footer_inference(spark, compact_cat, tmp_path):
+    """The schema recorded at stage/compaction time reads back exactly what
+    footer inference reads: after compaction, after rollback_to, and for a
+    manifest without ``schemas`` (a catalog written before schemas were
+    recorded), which keeps footer inference until its next commit."""
+    src, _ = compact_cat
+    root = tmp_path / "cat"
+    shutil.copytree(src.root, root)
+    cat = Catalog(spark, str(root))
+    last = cat.last_committed_epoch()
+    _assert_pinned_reads_match_inference(spark, cat)
+
+    for t in ("links", "frontier", "web_content"):
+        cat.compact_delta(t, last)
+    _assert_pinned_reads_match_inference(spark, cat)
+
+    assert cat.rollback_to(last - 1) == 1
+    _assert_pinned_reads_match_inference(spark, cat)
+
+    manifest = cat.read_manifest()
+    del manifest["schemas"]
+    with open(os.path.join(cat.root, "manifest.json"), "w") as f:
+        json.dump(manifest, f)
+    j0 = _jobs_submitted(spark)
+    cat.read_snapshot("deferred", last - 1)
+    assert _jobs_submitted(spark) > j0  # footer inference, as before schemas
+    _assert_pinned_reads_match_inference(spark, cat)
+
+    # the next commit that stages a table records its schema again
+    deferred = cat.read_snapshot("deferred", last - 1)
+    cat.commit_epoch(last, {"deferred": cat.stage("deferred", last, deferred)}, {})
+    assert set(cat.read_manifest()["schemas"]) == {"deferred"}
+    _assert_pinned_reads_match_inference(spark, cat)

@@ -202,3 +202,45 @@ def test_phrase_slop_move_semantics(spark):
     exact = {r["doc_id"] for r in PO.postings_phrase(pos, ["alpha", "beta"], k=100).collect()}
     slop0 = {r["doc_id"] for r in PO.postings_phrase_slop(pos, "alpha", "beta", slop=0, k=100).collect()}
     assert exact == slop0
+
+
+def _scan_output_rows(plan, path: str) -> list[int]:
+    """Output rows of each parquet scan over ``path`` in an executed plan.
+    Adaptive plans are walked through their final query stages; a reused
+    exchange is not descended, since its scan ran once, elsewhere."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "ReusedExchangeExec":
+        return []
+    if cls == "AdaptiveSparkPlanExec":
+        return _scan_output_rows(plan.executedPlan(), path)
+    if cls.endswith("QueryStageExec"):
+        return _scan_output_rows(plan.plan(), path)
+    if cls == "FileSourceScanExec" and path in plan.relation().location().toString():
+        return [int(plan.metrics().apply("numOutputRows").value())]
+    kids = plan.children()
+    return [n for i in range(kids.size()) for n in _scan_output_rows(kids.apply(i), path)]
+
+
+def test_bm25_scans_postings_slice_once(spark, docs, index, tmp_path):
+    """postings_bm25 and champion_topk read the persisted postings in ONE
+    scan: df and the scored branch share the slice's doc_id exchange, so
+    the summed scan output equals a single filtered pass. The answer
+    still equals the text-scan BM25."""
+    post, dl = index
+    pdir = str(tmp_path / "post")
+    post.write.parquet(pdir)
+    persisted = spark.read.parquet(pdir)
+    one_pass = persisted.filter(F.col("word").isin(*QT)).select("word", "doc_id", "tf")
+    one_pass.collect()
+    want_rows = _scan_output_rows(one_pass._jdf.queryExecution().executedPlan(), pdir)
+    assert len(want_rows) == 1 and want_rows[0] > 0
+
+    q = PO.postings_bm25(persisted, dl, QT, k=50)
+    got = [(r["doc_id"], r["score"]) for r in q.collect()]
+    assert _scan_output_rows(q._jdf.queryExecution().executedPlan(), pdir) == want_rows
+    via_scan = SE.search_bm25(docs, QT, "text", "doc_id", k=50).collect()
+    assert got == [(r["doc_id"], r["score"]) for r in via_scan]
+
+    c = PO.champion_topk(persisted, dl, QT, r=3, k=50)
+    c.collect()
+    assert _scan_output_rows(c._jdf.queryExecution().executedPlan(), pdir) == want_rows

@@ -10,18 +10,24 @@ explode + agg over the text column.
 
 This module is the materialize-once scale path: build the postings table
 `(word, doc_id, tf)` and the doc-length table once per ingest epoch
-(exactly when ES would bulk-index), persist both bucketed by word hash,
-and answer queries with a term-slice join — each query touches only the
-postings rows of its query terms (a partition-pruned read when the table
-is written bucketed/partitioned by `bucket`), never the raw text.
+(exactly when ES would bulk-index) and answer queries with a term-slice
+join — the plan never touches the raw text.
 
 100 TB shape: one explode + map-side partial hash-agg builds the postings
 (same shape as keywords_global, the plan the epoch job already runs); the
 dictionary is a second hash-agg over the postings, tiny relative to the
-corpus. Query time: the per-term dictionary rows (|query| rows) broadcast,
-the postings are filtered to the query's word set BEFORE any shuffle
-(predicate pushdown to the bucketed scan), and the per-doc score agg
-shuffles only matching (doc, term) pairs.
+corpus. Query time (`postings_bm25`, `champion_topk`): ONE scan of the
+postings with the query's word set pushed to parquet, whose output — the
+query terms' slice — is hash-partitioned by doc_id once. Per-term `df` is
+a map-side partial count over that same exchange (then |query| rows per
+partition cross the network), broadcast back; the scored branch re-reads
+the exchange (Spark reuses it) and joins the doc lengths and the
+broadcast `n_docs`/`avgdl` row, and the per-doc score sum needs no second
+shuffle. Every step is partition-parallel — no per-term single reducer.
+The pushed word predicate skips only row groups whose min/max exclude the
+query terms; on the crawl's unsorted postings that is none, so the scan
+reads the whole index once. A table partitioned by `bucket` and queried
+with `n_buckets` prunes to the terms' buckets instead.
 """
 
 from __future__ import annotations
@@ -75,27 +81,16 @@ def term_dictionary(postings: DataFrame) -> DataFrame:
     )
 
 
-def postings_bm25(
-    postings: DataFrame,
-    doclens: DataFrame,
-    query_tokens: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_buckets: int | None = None,
+def _term_slice(
+    postings: DataFrame, query_tokens: list[str], n_buckets: int | None = None
 ) -> DataFrame:
-    """Okapi BM25 top-k answered FROM the materialized index — byte-identical
-    scores to `search.search_bm25` on the same corpus (pinned by
-    tests/test_postings.py parity), but the plan never touches the text
-    column: filter postings to the query terms (pushed to the scan),
-    broadcast the |query|-row df/stats sides, one per-doc agg.
-
-    Pass `n_buckets` (the value used at build_postings time) when `postings`
-    is the PERSISTED table partitioned by `bucket`: the query then also
-    filters on the terms' bucket ids — xxhash64 of literals constant-folds,
-    so the predicate lands on the partition column and the scan prunes to
-    |query| of n_buckets partitions."""
-    stats = doclens.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+    """(word, doc_id, tf): the query terms' postings, hash-partitioned by
+    doc_id once. Every branch of a query plan built on it (df, champion
+    lists, scoring) reads this one exchange, so the postings are scanned
+    once. The explicit NOT NULL filters keep the branches' copies of the
+    exchange identical: the optimizer would otherwise infer them only on
+    the branches that join on word or doc_id. Postings rows always carry
+    both, so no row is dropped."""
     qpost = postings
     if n_buckets is not None:
         cond = None
@@ -103,11 +98,40 @@ def postings_bm25(
             eq = F.col("bucket") == F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)).cast("int")
             cond = eq if cond is None else (cond | eq)
         qpost = qpost.filter(cond)
-    qpost = qpost.filter(F.col("word").isin(*query_tokens)).select("word", "doc_id", "tf")
-    dfreq = qpost.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        qpost.filter(
+            F.col("word").isin(*query_tokens)
+            & F.col("word").isNotNull()
+            & F.col("doc_id").isNotNull()
+        )
+        .select("word", "doc_id", "tf")
+        .repartition("doc_id")
+    )
+
+
+def _bm25_topk(
+    qslice: DataFrame,
+    doclens: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    docs: DataFrame | None = None,
+) -> DataFrame:
+    """Okapi BM25 top-k over a `_term_slice`, scoring only the doc_ids in
+    ``docs`` (distinct) when given. df is `count(tf)`, not `count(1)`:
+    column pruning would otherwise drop tf from the df branch's copy of
+    the slice's exchange, and Spark could no longer reuse it (postings tf
+    is never null)."""
+    stats = doclens.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+    dfreq = qslice.groupBy("word").agg(F.count("tf").alias("df"))
+    scored = qslice.join(F.broadcast(dfreq), "word")
+    if docs is not None:
+        # an inner join with the distinct doc set, not a left_semi: the
+        # optimizer pushes a semi join below the exchange, which would give
+        # this branch its own scan
+        scored = scored.join(F.broadcast(docs), "doc_id")
     scored = (
-        qpost.join(F.broadcast(dfreq), "word")
-        .join(doclens, "doc_id")
+        scored.join(doclens, "doc_id")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
@@ -123,6 +147,33 @@ def postings_bm25(
         .agg(F.round(F.sum("term_score"), 4).alias("score"))
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def postings_bm25(
+    postings: DataFrame,
+    doclens: DataFrame,
+    query_tokens: list[str],
+    k: int = 20,
+    k1: float = 1.2,
+    b: float = 0.75,
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """Okapi BM25 top-k answered FROM the materialized index — byte-identical
+    scores to `search.search_bm25` on the same corpus (pinned by
+    tests/test_postings.py parity), but the plan never touches the text
+    column. One scan of `postings` (word set pushed to parquet) feeds one
+    doc_id hash exchange; per-term df is a partial count over that
+    exchange, broadcast back to it; doc lengths and the broadcast
+    n_docs/avgdl row join on, and the per-doc sum runs on the exchange's
+    partitioning (no second shuffle of the slice).
+
+    Pass `n_buckets` (the value used at build_postings time) when `postings`
+    is a table partitioned by `bucket`: the query then also filters on the
+    terms' bucket ids — xxhash64 of literals constant-folds, so the
+    predicate lands on the partition column and the scan prunes to |query|
+    of n_buckets partitions. The catalog's postings table is not
+    partitioned, so the crawl's serving path reads it whole, once."""
+    return _bm25_topk(_term_slice(postings, query_tokens, n_buckets), doclens, k, k1, b)
 
 
 def champion_lists(postings: DataFrame, r: int = 8) -> DataFrame:
@@ -159,32 +210,12 @@ def champion_topk(
     is EXACT BM25 (global df, true tf/dl) restricted to those candidates.
     Deterministic contract — same champions in, same top-k out — so the
     DuckDB oracle replays it exactly; recall vs exact BM25 is a quality
-    knob (r), not a correctness one."""
-    stats = doclens.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    qpost = postings.filter(F.col("word").isin(*query_tokens)).select(
-        "word", "doc_id", "tf"
-    )
-    dfreq = qpost.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    cand = champion_lists(qpost, r).select("doc_id").distinct()
-    scored = (
-        qpost.join(F.broadcast(cand), "doc_id", "left_semi")
-        .join(F.broadcast(dfreq), "word")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 4).alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    knob (r), not a correctness one. Same single-scan slice as
+    `postings_bm25`; the champion window and the scored branch both read
+    its one doc_id exchange."""
+    qslice = _term_slice(postings, query_tokens)
+    cand = champion_lists(qslice, r).select("doc_id").distinct()
+    return _bm25_topk(qslice, doclens, k, k1, b, cand)
 
 
 def postings_varbyte_stats(postings: DataFrame, top_n: int = 50) -> DataFrame:

@@ -883,7 +883,7 @@ def run_epoch(
     def _timed_stage(t: str, df: DataFrame) -> int:
         t0 = time.perf_counter()
         n = cat.stage(
-            t, epoch, df, None, sort_within.get(t),
+            t, epoch, df, sort_within.get(t),
             tuple(c for c in stats_for.get(t, ()) if c in df.columns),
         )
         write_secs[t] = time.perf_counter() - t0

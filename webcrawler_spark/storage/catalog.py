@@ -12,6 +12,12 @@ same *semantics* on plain Parquet with an atomic JSON manifest:
   os.replace = atomic on POSIX);
 - the manifest records per-epoch, per-table row counts and the observed
   pipeline counters (A1/A2 processing stats) — the per-partition lineage;
+- the manifest also holds each table's schema (``schemas``, one StructType
+  JSON per table, replaced by the latest commit that staged the table), so
+  every read is planned from the manifest alone: no parquet footer is
+  opened and no Spark job runs until the caller's own action, as Iceberg
+  plans from its table metadata. A table staged only by a manifest that
+  predates ``schemas`` keeps footer inference until its next commit;
 - ``load_state(epoch)`` reconstructs exactly the state as of that epoch, so
   resume-from-checkpoint is a manifest read.
 
@@ -30,6 +36,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "manifest.json"
 
@@ -64,6 +71,9 @@ class Catalog:
         # column min/max gathered by stage(stats_cols=...), keyed
         # (table, epoch); commit_epoch folds them into the manifest entry
         self._staged_stats: dict[tuple[str, int], dict] = {}
+        # StructType JSON of each staged frame, keyed (table, epoch);
+        # commit_epoch records them under the manifest's ``schemas``
+        self._staged_schemas: dict[tuple[str, int], dict] = {}
         os.makedirs(root, exist_ok=True)
 
     # ---- manifest ------------------------------------------------------------
@@ -96,7 +106,6 @@ class Catalog:
         table: str,
         epoch: int,
         df: DataFrame,
-        partition_by: str | None = None,
         sort_within_by: str | None = None,
         stats_cols: tuple[str, ...] = (),
     ) -> int:
@@ -113,6 +122,9 @@ class Catalog:
         ``read_delta_pruned`` uses them to skip whole epoch partitions
         whose range cannot match a predicate. Numeric/string columns only
         (values must round-trip through the JSON manifest).
+
+        The frame's schema is kept for ``commit_epoch`` to record in the
+        manifest, so later reads of the table need no footer inference.
         """
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
@@ -129,11 +141,9 @@ class Catalog:
         for c in stats_cols:
             aggs.append(F.min(c).alias(f"min__{c}"))
             aggs.append(F.max(c).alias(f"max__{c}"))
-        writer = df.observe(obs, *aggs).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
+        df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
         got = obs.get
+        self._staged_schemas[(table, epoch)] = df.schema.jsonValue()
         if stats_cols:
             self._staged_stats[(table, epoch)] = {
                 c: [got[f"min__{c}"], got[f"max__{c}"]] for c in stats_cols
@@ -141,31 +151,47 @@ class Catalog:
         return int(got["n"])
 
     def commit_epoch(self, epoch: int, table_counts: dict[str, int], counters: dict) -> None:
-        """Atomic commit: epoch becomes visible only after manifest replace."""
+        """Atomic commit: epoch becomes visible only after manifest replace.
+        Each committed table's staged schema replaces its ``schemas`` entry."""
         manifest = self.read_manifest()
         manifest["epochs"] = [e for e in manifest["epochs"] if e["epoch"] < epoch]
         entry = {"epoch": epoch, "tables": table_counts, "counters": counters}
-        stats = {
-            t: self._staged_stats.pop((t, e))
-            for (t, e) in list(self._staged_stats)
-            if e == epoch
-        }
+        stats = _pop_epoch(self._staged_stats, epoch)
         if stats:
             entry["stats"] = stats
         manifest["epochs"].append(entry)
+        schemas = _pop_epoch(self._staged_schemas, epoch)
+        manifest.setdefault("schemas", {}).update(
+            {t: sc for t, sc in schemas.items() if t in table_counts}
+        )
         self._write_manifest(manifest)
 
     # ---- read ------------------------------------------------------------------
+    def _read(self, manifest: dict, table: str, paths: list[str]) -> DataFrame:
+        """Parquet read of ``paths`` through the schema the manifest holds
+        for ``table``: planning opens no footer and submits no Spark job.
+        A table whose schema a pre-``schemas`` manifest never recorded
+        falls back to footer inference (one job) until its next commit."""
+        schema = manifest.get("schemas", {}).get(table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*paths)
+
     def read_delta_union(self, table: str, as_of_epoch: int) -> DataFrame | None:
         """State of a delta table = union of committed partitions <= epoch.
         Only manifest-committed epoch dirs are read (uncommitted data is
         invisible — snapshot isolation); each delta row carries its own epoch
-        column for lineage, so no partition inference is needed."""
-        base = os.path.join(self.root, table)
-        committed = self._committed_epochs(table, as_of_epoch)
-        if not committed or not os.path.exists(base):
+        column for lineage, so no partition inference is needed, and the
+        manifest holds the table's schema, so no footer inference either:
+        building the read is one manifest parse and no Spark job."""
+        return self._union(self.read_manifest(), table, as_of_epoch)
+
+    def _union(self, manifest: dict, table: str, as_of_epoch: int) -> DataFrame | None:
+        committed = _committed(manifest, table, as_of_epoch)
+        if not committed or not os.path.exists(os.path.join(self.root, table)):
             return None
-        comp = self.read_manifest().get("compactions", {}).get(table)
+        comp = manifest.get("compactions", {}).get(table)
         if comp:
             # compacted base + deltas after the compaction point: one dir
             # instead of one per epoch. Because every base row keeps its
@@ -181,14 +207,16 @@ class Catalog:
             from pyspark.sql import functions as F
 
             if table in MERGE_TABLES and comp["as_of"] > as_of_epoch:
-                return self._read_delta_raw(table, as_of_epoch)
-            paths = [os.path.join(self.root, table, f"compact={comp['as_of']}")]
+                return self._read(
+                    manifest, table, self._raw_paths(manifest, table, as_of_epoch)
+                )
+            paths = [self._compact_dir(table, comp["as_of"])]
             paths += [self._epoch_dir(table, e) for e in committed if e > comp["as_of"]]
-            df = self.spark.read.parquet(*paths)
+            df = self._read(manifest, table, paths)
             if comp["as_of"] > as_of_epoch:
                 df = df.filter(F.col(_EPOCH_COL[table]) <= as_of_epoch)
             return df
-        return self._read_delta_raw(table, as_of_epoch)
+        return self._read(manifest, table, self._raw_paths(manifest, table, as_of_epoch))
 
     def read_delta_pruned(
         self, table: str, as_of_epoch: int, col: str, lo, hi
@@ -210,14 +238,14 @@ class Catalog:
         if manifest.get("compactions", {}).get(table) or manifest.get(
             "expired", {}
         ).get(table):
-            df = self.read_delta_union(table, as_of_epoch)
+            df = self._union(manifest, table, as_of_epoch)
             return None if df is None else df.filter(pred)
         stats = {
             e["epoch"]: e.get("stats", {}).get(table, {}).get(col)
             for e in manifest["epochs"]
         }
         keep = []
-        for epoch in self._committed_epochs(table, as_of_epoch):
+        for epoch in _committed(manifest, table, as_of_epoch):
             s = stats.get(epoch)
             if s is None or s[0] is None or s[1] is None or (
                 not (s[1] < lo or s[0] > hi)
@@ -226,7 +254,7 @@ class Catalog:
         if not keep:
             return None
         paths = [self._epoch_dir(table, e) for e in keep]
-        return self.spark.read.parquet(*paths).filter(pred)
+        return self._read(manifest, table, paths).filter(pred)
 
     def read_merged(self, table: str, as_of_epoch: int) -> DataFrame | None:
         """Resolved current state of a merge table as of an epoch: the latest
@@ -252,17 +280,14 @@ class Catalog:
 
     def read_snapshot(self, table: str, as_of_epoch: int) -> DataFrame | None:
         """Latest committed snapshot partition <= epoch."""
-        committed = [
-            e["epoch"]
-            for e in self.read_manifest()["epochs"]
-            if e["epoch"] <= as_of_epoch and table in e["tables"]
-        ]
+        manifest = self.read_manifest()
+        committed = _committed(manifest, table, as_of_epoch)
         if not committed:
             return None
         path = self._epoch_dir(table, max(committed))
         if not os.path.exists(path):
             return None
-        return self.spark.read.parquet(path)
+        return self._read(manifest, table, [path])
 
     def read_incremental(
         self, table: str, from_epoch: int, to_epoch: int
@@ -279,20 +304,17 @@ class Catalog:
         None if no epoch in the range touched the table; raises if part of
         the range was expired (its per-epoch dirs are gone, as in Iceberg
         once expire_snapshots passes a snapshot)."""
-        committed = [
-            e for e in self._committed_epochs(table, to_epoch) if e > from_epoch
-        ]
+        manifest = self.read_manifest()
+        committed = [e for e in _committed(manifest, table, to_epoch) if e > from_epoch]
         if not committed:
             return None
-        expired_to = self.read_manifest().get("expired", {}).get(table, -1)
+        expired_to = manifest.get("expired", {}).get(table, -1)
         if expired_to >= min(committed):
             raise ValueError(
                 f"incremental read of {table} ({from_epoch}, {to_epoch}]: "
                 f"deltas <= {expired_to} expired"
             )
-        df = self.spark.read.parquet(
-            *[self._epoch_dir(table, e) for e in committed]
-        )
+        df = self._read(manifest, table, [self._epoch_dir(table, e) for e in committed])
         if table in MERGE_TABLES:
             df = self._resolve_latest(table, df)
         return df
@@ -320,9 +342,7 @@ class Catalog:
         stale_comp_dirs = []
         for t in list(comps):
             if comps[t]["as_of"] > epoch:
-                stale_comp_dirs.append(
-                    os.path.join(self.root, t, f"compact={comps[t]['as_of']}")
-                )
+                stale_comp_dirs.append(self._compact_dir(t, comps[t]["as_of"]))
                 del comps[t]
         self._write_manifest(manifest)  # atomic rollback commit point
         for path in stale_comp_dirs:
@@ -357,30 +377,39 @@ class Catalog:
         For merge tables the base is the RESOLVED state (latest row per key)
         as of the compaction point — superseded statuses are dropped, so time
         travel below the point needs the raw per-epoch dirs (kept until
-        ``expire_deltas_before``)."""
+        ``expire_deltas_before``).
+
+        Returns the base's row count, observed on the rewrite job itself
+        (no re-read); the base's schema replaces the table's manifest
+        entry in the same atomic manifest write."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         if table not in DELTA_TABLES | MERGE_TABLES:
             raise ValueError(f"{table} is not a delta table")
-        df = self._read_delta_raw(table, as_of_epoch)
-        if df is None:
+        manifest = self.read_manifest()
+        if not _committed(manifest, table, as_of_epoch):
             return 0
+        df = self._read(manifest, table, self._raw_paths(manifest, table, as_of_epoch))
         if table in MERGE_TABLES:
             df = self._resolve_latest(table, df)
-        path = os.path.join(self.root, table, f"compact={as_of_epoch}")
+        path = self._compact_dir(table, as_of_epoch)
         if os.path.exists(path):
             shutil.rmtree(path)
-        df.write.mode("overwrite").parquet(path)
-        manifest = self.read_manifest()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+        n = int(obs.get["n"])
         prev_comp = manifest.get("compactions", {}).get(table)
         manifest.setdefault("compactions", {})[table] = {"as_of": as_of_epoch}
+        manifest.setdefault("schemas", {})[table] = df.schema.jsonValue()
         self._write_manifest(manifest)  # atomic: readers see old layout or new
-        n = self.spark.read.parquet(path).count()
         # reclaim the superseded base (nothing reads it once the manifest
         # points at the new one; with compact_every over a long crawl the
         # old bases would otherwise each leak a full table copy). On a real
         # cluster with concurrent readers this deferred delete is Iceberg's
         # expire_snapshots job.
         if prev_comp and prev_comp["as_of"] != as_of_epoch:
-            old = os.path.join(self.root, table, f"compact={prev_comp['as_of']}")
+            old = self._compact_dir(table, prev_comp["as_of"])
             if os.path.exists(old):
                 shutil.rmtree(old)
         return n
@@ -456,8 +485,9 @@ class Catalog:
         catalog's compaction exists to prevent. Driver-side directory walk
         over the manifest's epoch list — bounded by epoch count (KBs),
         never data-sized."""
-        if as_of_epoch is None:
-            as_of_epoch = self.last_committed_epoch()
+        manifest = self.read_manifest()
+        if as_of_epoch is None and manifest["epochs"]:
+            as_of_epoch = manifest["epochs"][-1]["epoch"]
         rows: list[tuple] = []
 
         def _du(path: str) -> tuple[int, int]:
@@ -470,14 +500,14 @@ class Catalog:
             return n, b
 
         if as_of_epoch is not None:
-            for e in self._committed_epochs(table, as_of_epoch):
+            for e in _committed(manifest, table, as_of_epoch):
                 path = self._epoch_dir(table, e)
                 if os.path.exists(path):
                     n, b = _du(path)
                     rows.append(("delta", e, n, b))
-        comp = self.read_manifest().get("compactions", {}).get(table)
+        comp = manifest.get("compactions", {}).get(table)
         if comp is not None:
-            base = os.path.join(self.root, table, f"compact={comp['as_of']}")
+            base = self._compact_dir(table, comp["as_of"])
             if os.path.exists(base):
                 n, b = _du(base)
                 rows.append(("base", comp["as_of"], n, b))
@@ -490,49 +520,57 @@ class Catalog:
         ``expire_snapshots``). Only legal below an existing compaction point
         — current-state reads are unaffected; time travel below the expiry
         boundary becomes unavailable, as in Iceberg. Returns dirs removed."""
-        comp = self.read_manifest().get("compactions", {}).get(table)
+        manifest = self.read_manifest()
+        comp = manifest.get("compactions", {}).get(table)
         if comp is None or epoch > comp["as_of"]:
             raise ValueError(
                 f"cannot expire {table} deltas <= {epoch}: not covered by a compaction"
             )
         removed = 0
-        for e in self._committed_epochs(table, epoch):
+        for e in _committed(manifest, table, epoch):
             path = self._epoch_dir(table, e)
             if os.path.exists(path):
                 shutil.rmtree(path)
                 removed += 1
-        manifest = self.read_manifest()
         manifest.setdefault("expired", {})[table] = max(
             epoch, manifest.get("expired", {}).get(table, -1)
         )
         self._write_manifest(manifest)
         return removed
 
-    def _committed_epochs(self, table: str, as_of_epoch: int) -> list[int]:
-        return [
-            e["epoch"]
-            for e in self.read_manifest()["epochs"]
-            if e["epoch"] <= as_of_epoch and table in e["tables"]
+    def _compact_dir(self, table: str, as_of: int) -> str:
+        return os.path.join(self.root, table, f"compact={as_of}")
+
+    def _raw_paths(self, manifest: dict, table: str, as_of_epoch: int) -> list[str]:
+        """Dirs of the raw per-epoch partitions <= as_of_epoch, ignoring any
+        compaction; once deltas were expired, the previous compacted base
+        stands in under the surviving deltas (requires that base to cover
+        as_of_epoch)."""
+        committed = _committed(manifest, table, as_of_epoch)
+        expired_to = manifest.get("expired", {}).get(table, -1)
+        if expired_to < 0:
+            return [self._epoch_dir(table, e) for e in committed]
+        comp = manifest.get("compactions", {}).get(table)
+        if comp is None or comp["as_of"] > as_of_epoch:
+            raise ValueError(
+                f"time travel to epoch {as_of_epoch} of {table}: deltas <= "
+                f"{expired_to} expired"
+            )
+        live = [e for e in committed if e > comp["as_of"]]
+        return [self._compact_dir(table, comp["as_of"])] + [
+            self._epoch_dir(table, e) for e in live
         ]
 
-    def _read_delta_raw(self, table: str, as_of_epoch: int) -> DataFrame | None:
-        """Union of raw per-epoch partitions, ignoring any compaction (used
-        to build a compaction; requires the partitions to not be expired)."""
-        manifest = self.read_manifest()
-        expired_to = manifest.get("expired", {}).get(table, -1)
-        comp = manifest.get("compactions", {}).get(table)
-        committed = self._committed_epochs(table, as_of_epoch)
-        if not committed:
-            return None
-        if expired_to >= 0:
-            # stack the previous compacted base under the surviving deltas
-            if comp is None or comp["as_of"] > as_of_epoch:
-                raise ValueError(
-                    f"time travel to epoch {as_of_epoch} of {table}: deltas <= "
-                    f"{expired_to} expired"
-                )
-            live = [e for e in committed if e > comp["as_of"]]
-            paths = [os.path.join(self.root, table, f"compact={comp['as_of']}")]
-            paths += [self._epoch_dir(table, e) for e in live]
-            return self.spark.read.parquet(*paths)
-        return self.spark.read.parquet(*[self._epoch_dir(table, e) for e in committed])
+
+def _committed(manifest: dict, table: str, as_of_epoch: int) -> list[int]:
+    """Epochs <= as_of_epoch whose commit staged ``table``."""
+    return [
+        e["epoch"]
+        for e in manifest["epochs"]
+        if e["epoch"] <= as_of_epoch and table in e["tables"]
+    ]
+
+
+def _pop_epoch(staged: dict[tuple[str, int], dict], epoch: int) -> dict[str, dict]:
+    """Remove and return ``{table: value}`` for the entries staged at epoch."""
+    return {t: staged.pop((t, e)) for (t, e) in list(staged) if e == epoch}

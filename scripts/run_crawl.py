@@ -41,8 +41,6 @@ def main() -> None:
     ap.add_argument("--recrawl", action="store_true",
                     help="adaptive revisit: fetched URLs re-enter at their "
                          "change-rate-banded interval")
-    ap.add_argument("--adaptive-salt", action="store_true",
-                    help="salt only hosts measured above the hot threshold")
     ap.add_argument("--detect-soft404", action="store_true",
                     help="drop per-host HTTP-200 error-template pages from "
                          "indexing and link discovery")
@@ -106,7 +104,6 @@ def main() -> None:
         hot_host_salt=args.salt,
         use_bloom=args.use_bloom,
         recrawl=args.recrawl,
-        adaptive_salt=args.adaptive_salt,
         mine_dust=args.mine_dust,
         collapse_mirrors=args.collapse_mirrors,
         detect_soft404=args.detect_soft404,

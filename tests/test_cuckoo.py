@@ -1,5 +1,5 @@
-"""Partitioned cuckoo-filter seen set (operators/cuckoo.py): the deletable
-tier-1 prefilter. Invariants tested:
+"""Partitioned cuckoo-filter fingerprint set (operators/cuckoo.py): the
+deletable filter behind the TTL-eviction contract entry. Invariants tested:
 
 - no false negatives (every inserted fp probes True);
 - bounded false-positive rate on disjoint fps (16-bit tags, 2x4 slots:
@@ -7,7 +7,6 @@ tier-1 prefilter. Invariants tested:
 - delete removes exactly the expired fps while preserving no-false-negatives
   for everything else (the TTL-eviction path a bloom cannot express);
 - incremental update_cuckoo equals a from-scratch build in probe behavior;
-- dedupe_new_urls_cuckoo is exactly equivalent to the plain anti-join;
 - numpy kernels survive saturation pressure (kick loop) deterministically.
 """
 
@@ -186,21 +185,6 @@ def test_delete_ttl_eviction(spark):
         .count()
     )
     assert exp_hits / len(expired) < 0.005
-
-
-def test_dedupe_equivalence_with_anti_join(spark):
-    all_fps = _fps(20_000, seed=13)
-    seen_fps = all_fps[::2]
-    seen = _seen_df(spark, seen_fps)
-    cand = _seen_df(spark, all_fps)
-    ck = CK.build_cuckoo(seen, n_buckets=8, capacity=40_000)
-    via_cuckoo = sorted(
-        r["url_fp"] for r in CK.dedupe_new_urls_cuckoo(cand, seen, ck).collect()
-    )
-    plain = sorted(
-        r["url_fp"] for r in cand.join(seen, "url_fp", "left_anti").collect()
-    )
-    assert via_cuckoo == plain
 
 
 def test_sparse_bucket_population_no_false_negatives(spark):

@@ -234,51 +234,27 @@ def test_bloom_epoch_equivalence(spark, pages_df, seeds_df, robots_df, tmp_path_
     assert probed.filter(~F.col("might_contain")).count() == 0
 
 
-def test_cuckoo_epoch_equivalence(spark, pages_df, seeds_df, robots_df, tmp_path_factory, crawl_run, oracle_run):
-    """The cuckoo prefilter variant (seen_filter='cuckoo') is, like the bloom,
-    a pure optimization: identical crawl order, seen set, and counters (the
-    anti-join stays authoritative). Additionally its snapshot probes every
-    committed fingerprint positive (no false negatives)."""
-    from dataclasses import replace
-
-    cfg_ck = replace(CFG, use_bloom=True, seen_filter="cuckoo", bloom_buckets=8)
-    root = tmp_path_factory.mktemp("crawl_cuckoo")
-    cat = Catalog(spark, str(root))
-    E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, N_EPOCHS, cfg_ck)
-
-    assert _spark_schedules(cat, N_EPOCHS) == oracle_run.schedules
-    seen = {r["url_norm"] for r in cat.read_delta_union("seen", N_EPOCHS - 1).collect()}
-    assert seen == oracle_run.seen
-    ck = cat.read_snapshot("seen_cuckoo", N_EPOCHS - 1)
-    assert ck is not None and ck.count() > 0
-    from webcrawler_spark.operators import cuckoo as CK
-
-    seen_df = cat.read_delta_union("seen", N_EPOCHS - 1)
-    probed = CK.cuckoo_might_contain(seen_df, ck)
-    assert probed.filter(~F.col("might_contain")).count() == 0
-
-
 def test_filter_enabled_mid_run_bootstraps_full_seen(spark, pages_df, seeds_df, robots_df, tmp_path_factory, oracle_run):
-    """Enabling the tier-1 prefilter (or switching its kind) after epochs have
-    run must build it from the FULL seen set, not just the current delta —
-    otherwise later epochs bypass the exact anti-join on its false negatives."""
+    """Enabling the bloom prefilter after epochs have run must build it from
+    the FULL seen set, not just the current delta — otherwise later epochs
+    bypass the exact anti-join on its false negatives."""
     from dataclasses import replace
 
     root = tmp_path_factory.mktemp("crawl_midrun_filter")
     cat = Catalog(spark, str(root))
     # epochs 0-1 with no prefilter at all
     E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, CFG)
-    # epoch 2 with the cuckoo prefilter enabled mid-run
-    cfg_ck = replace(CFG, use_bloom=True, seen_filter="cuckoo", bloom_buckets=8)
-    E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 1, cfg_ck)
+    # epoch 2 with the bloom prefilter enabled mid-run
+    cfg_bloom = replace(CFG, use_bloom=True, bloom_buckets=8)
+    E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 1, cfg_bloom)
 
-    from webcrawler_spark.operators import cuckoo as CK
+    from webcrawler_spark.operators import dedup as D
 
-    ck = cat.read_snapshot("seen_cuckoo", 2)
-    assert ck is not None
+    bloom = cat.read_snapshot("seen_bloom", 2)
+    assert bloom is not None
     # EVERY committed fingerprint (incl. epochs 0-1) must probe positive
     seen_df = cat.read_delta_union("seen", 2)
-    assert CK.cuckoo_might_contain(seen_df, ck).filter(~F.col("might_contain")).count() == 0
+    assert D.bloom_might_contain(seen_df, bloom).filter(~F.col("might_contain")).count() == 0
     # and the crawl itself still matches the oracle
     assert _spark_schedules(cat, N_EPOCHS) == oracle_run.schedules
 
@@ -587,7 +563,6 @@ def test_all_optin_features_compose(spark, pages_df, seeds_df, robots_df, tmp_pa
         politeness_by_registrable=True,
         build_index=True,
         recrawl=True,
-        adaptive_salt=True,
         mine_dust=True,
         detect_soft404=True,
         collapse_mirrors=True,

@@ -231,11 +231,11 @@ def test_scheduler_salted_equals_unsalted(spark):
     assert ka == kb
 
 
-def test_scheduler_adaptive_salt_equals_blanket_and_unsalted(spark):
-    # one genuinely hot host (60 rows > threshold 20) + many cold hosts
-    # (3 rows each, some overflowing their budget of 4): the adaptive path
-    # must salt ONLY the hot host yet produce the identical schedule AND
-    # deferred sets as both the unsalted and blanket-salted plans.
+def test_scheduler_salted_equals_unsalted_hot_and_cold(spark):
+    # one hot host (60 rows) + many cold hosts (6 rows each, budget 4): the
+    # two-phase salted plan must produce the identical schedule AND
+    # deferred sets as the single-window unsalted plan, with overflow from
+    # both the hot and the cold hosts.
     rows = [(f"https://hot.com/p{i:03d}", "hot.com", i % 7, 0, 0) for i in range(60)]
     for h in range(12):
         rows += [
@@ -243,45 +243,19 @@ def test_scheduler_adaptive_salt_equals_blanket_and_unsalted(spark):
             for i in range(6)  # 6 rows, budget 4 -> 2 defer per cold host
         ]
     pending = _pending_df(spark, rows)
-    variants = [
-        CrawlConfig(epoch_seconds=4, hot_host_salt=1),
-        CrawlConfig(epoch_seconds=4, hot_host_salt=4),
-        CrawlConfig(epoch_seconds=4, hot_host_salt=4, adaptive_salt=True,
-                    hot_host_threshold=20),
-    ]
     outs = []
-    for cfg in variants:
+    for salt in (1, 4):
+        cfg = CrawlConfig(epoch_seconds=4, hot_host_salt=salt)
         sch, dfr, _ = S.schedule_epoch(pending, None, None, 0, cfg)
         outs.append((
             [(r["host"], r["rank_in_host"], r["url_norm"])
              for r in sch.orderBy("host", "rank_in_host").collect()],
             sorted(r["url_norm"] for r in dfr.collect()),
         ))
-    assert outs[0] == outs[1] == outs[2]
-    # and the adaptive variant actually deferred someone from both tiers
-    assert any(u.startswith("https://hot.com") for u in outs[2][1])
-    assert any(u.startswith("https://cold") for u in outs[2][1])
-
-
-def test_scheduler_adaptive_salt_no_hot_hosts(spark):
-    # below-threshold frontier: the hot dim is empty, every key rides the
-    # cold (salt=0) path, and the output still matches the unsalted plan.
-    rows = [(f"https://h{h}.com/p{i}", f"h{h}.com", i, 0, 0)
-            for h in range(5) for i in range(6)]
-    pending = _pending_df(spark, rows)
-    cfg_a = CrawlConfig(epoch_seconds=4, hot_host_salt=4, adaptive_salt=True,
-                        hot_host_threshold=1000)
-    cfg_p = CrawlConfig(epoch_seconds=4, hot_host_salt=1)
-    a, ad, _ = S.schedule_epoch(pending, None, None, 0, cfg_a)
-    p, pd, _ = S.schedule_epoch(pending, None, None, 0, cfg_p)
-    ka = [(r["host"], r["rank_in_host"], r["url_norm"])
-          for r in a.orderBy("host", "rank_in_host").collect()]
-    kp = [(r["host"], r["rank_in_host"], r["url_norm"])
-          for r in p.orderBy("host", "rank_in_host").collect()]
-    assert ka == kp
-    assert sorted(r["url_norm"] for r in ad.collect()) == sorted(
-        r["url_norm"] for r in pd.collect()
-    )
+    assert outs[0] == outs[1]
+    # and the salted plan deferred someone from both tiers
+    assert any(u.startswith("https://hot.com") for u in outs[1][1])
+    assert any(u.startswith("https://cold") for u in outs[1][1])
 
 
 def test_scheduler_robots_gate(spark):

@@ -11,6 +11,7 @@
 """
 
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -88,13 +89,8 @@ def test_no_row_at_a_time_python(spark, name):
     assert "CartesianProduct" not in plan, f"{name} has a shuffled cartesian"
 
 
-def test_frontier_schedule_single_politeness_shuffle(spark, seeds_df, robots_df):
-    """SURVEY §3.2: the politeness+priority stage is one shuffle on host
-    (plus the salted pre-rank exchange when salting is on). With salting off,
-    exactly one hashpartitioning(host) exchange feeds the window."""
-    from webcrawler_spark.config import CrawlConfig
+def _seed_pending(seeds_df):
     from webcrawler_spark.operators import dedup as D
-    from webcrawler_spark.operators import scheduler as S
 
     cand = seeds_df.select(
         "url",
@@ -102,19 +98,49 @@ def test_frontier_schedule_single_politeness_shuffle(spark, seeds_df, robots_df)
         F.col("depth"),
         F.col("priority").alias("source_priority"),
     )
-    pending = (
+    return (
         D.canonicalize(cand)
         .withColumn("priority", F.lit(50))
         .withColumn("discovered_epoch", F.lit(0))
         .withColumn("attempts", F.lit(0))
         .drop("source_priority")
     )
+
+
+def test_frontier_schedule_single_politeness_shuffle(spark, seeds_df, robots_df):
+    """SURVEY §3.2: the politeness+priority stage is one shuffle on host
+    (plus the salted pre-rank exchange when salting is on). With salting off,
+    exactly one hashpartitioning(host) exchange feeds the window."""
+    from webcrawler_spark.config import CrawlConfig
+    from webcrawler_spark.operators import scheduler as S
+
     schedule, _, _ = S.schedule_epoch(
-        pending, robots_df, None, 0, CrawlConfig(), salt_factor=1
+        _seed_pending(seeds_df), robots_df, None, 0, CrawlConfig(), salt_factor=1
     )
     plan = plan_str(schedule, "simple")
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 host shuffle, saw {n_exchanges}:\n{plan}"
+
+
+def test_frontier_schedule_salted_two_phase_shuffles(spark, seeds_df, robots_df):
+    """Salting on runs the one two-phase plan: a (host, salt) pre-rank
+    exchange, then the per-host window exchange — and nothing that counts
+    rows per host first (no second, data-driven salting plan). The pre-rank
+    exchange is printed under both arms of the ranked union (survivors and
+    pre-deferred overflow), so the check is on the distinct exchange keys."""
+    from webcrawler_spark.config import CrawlConfig
+    from webcrawler_spark.operators import scheduler as S
+
+    schedule, _, _ = S.schedule_epoch(
+        _seed_pending(seeds_df), robots_df, None, 0, CrawlConfig(), salt_factor=4
+    )
+    plan = plan_str(schedule, "simple")
+    keys = {
+        re.sub(r"#\d+", "", k).rsplit(",", 1)[0]
+        for k in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    }
+    assert keys == {"host, salt", "host"}, f"politeness shuffles {keys}:\n{plan}"
+    assert "HashAggregate" not in plan, plan
 
 
 def test_search_fuzzy_broadcasts_expansions(spark):

@@ -28,24 +28,19 @@ class CrawlConfig:
 
     # dedup
     fuzzy_threshold: int = 85
-    use_fuzzy: bool = False           # fuzzy tier is off the hot path (deduplicator.py:188 use_fuzzy flag)
     fuzzy_recent_per_host: int = 100  # deduplicator.py:144-150
     bloom_capacity: int = 10_000_000
     bloom_fp_rate: float = 0.001
     bloom_buckets: int = 32           # per-host-hash bloom partitions; 2048 at 10^10 scale
-    use_bloom: bool = False           # persistent cross-epoch tier-1 prefilter in the epoch loop
-    seen_filter: str = "bloom"        # prefilter kind: "bloom" (append-only) | "cuckoo" (deletable, TTL eviction)
+    use_bloom: bool = False           # persistent cross-epoch bloom prefilter in front of the seen anti-join
     compact_every: int = 0            # compact delta tables every N epochs (0 = off); keeps the
                                       # per-epoch read from unioning one dir per prior epoch
 
     # scale knobs
     shuffle_partitions: int = 32
     n_shards: int = 4                 # docker-compose has 4 fetcher shards
-    hot_host_salt: int = 8            # sub-partitions for skewed hosts in the top-k window
-    hot_host_threshold: int = 100_000 # pending rows per host above which salting engages
-    adaptive_salt: bool = False       # salt ONLY hosts above hot_host_threshold (measured per
-                                      # epoch); cold hosts finalize in the pre-window, so the
-                                      # second exchange carries hot survivors only
+    hot_host_salt: int = 8            # (host, salt) sub-partitions of the two-phase top-k window;
+                                      # <= 1 runs the single per-host window
 
     # training-data extension: mask PII (email/phone/IPv4) in the indexed
     # content column. content_hash stays computed on the UNMASKED text so
@@ -218,7 +213,6 @@ ALL_OPTINS: dict = dict(
     politeness_by_registrable=True,
     build_index=True,
     recrawl=True,
-    adaptive_salt=True,
     mine_dust=True,
     detect_soft404=True,
     collapse_mirrors=True,

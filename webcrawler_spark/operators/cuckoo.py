@@ -1,14 +1,17 @@
-"""Partitioned cuckoo-filter URL-seen set — the deletable alternative to the
-bloom prefilter in dedup.py (two-tier seen check, deduplicator.py:88-121).
+"""Partitioned cuckoo-filter fingerprint set with deletion — the TTL
+operator behind the driver contract's ``cuckoo_ttl_stats`` entry. The crawl
+loop's seen-set prefilter is the bloom in dedup.py; this module is not an
+epoch-loop alternative to it.
 
-Why a cuckoo filter next to the bloom: the reference's content-dedup cache
-expires entries after 30 days (indexer/app.py:213 ``content_hash_ttl = 86400
-* 30``) and recrawl policies likewise *remove* URLs from the "don't fetch
-again" set. A bloom filter cannot delete — supporting TTL eviction there
-means periodic full rebuilds over the 10^10-fp seen set. A cuckoo filter
-(Fan et al., "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014)
-deletes in O(1) per fingerprint, so TTL expiry becomes a small per-epoch
-delta job against only the touched buckets.
+Why a deletable filter: the reference's content-dedup cache expires entries
+after 30 days (indexer/app.py:213 ``content_hash_ttl = 86400 * 30``) and
+recrawl policies likewise *remove* URLs from the "don't fetch again" set. A
+bloom filter cannot delete — supporting TTL eviction there means periodic
+full rebuilds over the 10^10-fp seen set. A cuckoo filter (Fan et al.,
+"Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014) deletes in O(1)
+per fingerprint, so TTL expiry becomes a small delta job against only the
+touched buckets (build_cuckoo / update_cuckoo / cuckoo_might_contain /
+delete_cuckoo).
 
 Layout mirrors the bloom: the fp space is split into ``n_buckets`` blobs by
 ``dedup.bucket_of`` (xxhash64-remixed pmod); each blob is an independent cuckoo table of
@@ -410,18 +413,3 @@ def cuckoo_might_contain(
         .applyInPandas(_probe_group, schema=out_schema)
     )
 
-
-def dedupe_new_urls_cuckoo(
-    candidates: DataFrame, seen: DataFrame | None, cuckoo: DataFrame | None = None
-) -> DataFrame:
-    """Two-tier exact dedup with the cuckoo prefilter as tier 1 (drop-in for
-    dedup.dedupe_new_urls when the seen set needs TTL eviction)."""
-    if seen is None:
-        return candidates
-    if cuckoo is not None:
-        probed = cuckoo_might_contain(candidates, cuckoo)
-        definite_new = probed.filter(~F.col("might_contain")).drop("might_contain")
-        maybe = probed.filter(F.col("might_contain")).drop("might_contain")
-        checked = maybe.join(seen.select("url_fp"), "url_fp", "left_anti")
-        return definite_new.unionByName(checked)
-    return candidates.join(seen.select("url_fp"), "url_fp", "left_anti")

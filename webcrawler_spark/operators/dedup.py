@@ -9,7 +9,7 @@
   of bits split across buckets (SURVEY §7 hard-part 3); each bucket blob stays
   well under the 2 GB Arrow limit.
 - fuzzy_dedupe: same-domain last-100 fuzzy match (deduplicator.py:123-186),
-  off the hot path, gated by config.use_fuzzy.
+  off the hot path: the epoch loop never calls it, callers opt in by calling.
 - content_dedup: content-hash window dedup (indexer/app.py:216-253) — first
   writer by (first_seen, url) wins, losers are marked duplicates.
 """
@@ -27,7 +27,7 @@ from ..functions.udfs import canonicalize_udf, fuzz_max_score_udf
 # ---- canonicalize + fingerprint ------------------------------------------------
 
 
-def canonicalize(df: DataFrame, url_col: str = "url", native_fast_path: bool = True) -> DataFrame:
+def canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Adds url_norm/host/path/url_fp; drops rows the normalizer rejects
     (url_normalizer.py:35-88 reject rules).
 
@@ -36,19 +36,16 @@ def canonicalize(df: DataFrame, url_col: str = "url", native_fast_path: bool = T
     pandas UDF. The filter-union keeps the UDF off the fast-path rows
     entirely (a when() would evaluate the vectorized UDF on every row). At
     web scale ~99% of URLs are simple, so the Python lane is cold."""
-    if not native_fast_path:
-        out = df.withColumn("_canon", canonicalize_udf(F.col(url_col)))
-    else:
-        from ..functions.urlnorm_native import canonicalize_native, is_simple_url
+    from ..functions.urlnorm_native import canonicalize_native, is_simple_url
 
-        simple = is_simple_url(F.col(url_col))
-        fast = df.filter(simple).withColumn("_canon", canonicalize_native(F.col(url_col)))
-        slow = df.filter(~F.coalesce(simple, F.lit(False))).withColumn(
-            "_canon", canonicalize_udf(F.col(url_col))
-        )
-        out = fast.unionByName(slow)
+    simple = is_simple_url(F.col(url_col))
+    fast = df.filter(simple).withColumn("_canon", canonicalize_native(F.col(url_col)))
+    slow = df.filter(~F.coalesce(simple, F.lit(False))).withColumn(
+        "_canon", canonicalize_udf(F.col(url_col))
+    )
     return (
-        out.withColumn("url_norm", F.col("_canon.url_norm"))
+        fast.unionByName(slow)
+        .withColumn("url_norm", F.col("_canon.url_norm"))
         .withColumn("host", F.col("_canon.host"))
         .withColumn("path", F.col("_canon.path"))
         .drop("_canon")

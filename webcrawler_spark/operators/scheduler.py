@@ -131,61 +131,7 @@ def schedule_epoch(
     # ---- W1: per-host top-k under total ordering, optionally salted (skew)
     salt = salt_factor if salt_factor is not None else cfg.hot_host_salt
     pre_overflow = None
-    if salt and salt > 1 and cfg.adaptive_salt:
-        # Adaptive variant: measure per-key pending counts (map-side partial
-        # agg -> tiny dim) and salt ONLY keys above hot_host_threshold. Cold
-        # keys get salt ≡ 0, so their pre-window partition (key, 0) IS the
-        # per-key window — their pre-rank is the true host rank and they
-        # finalize without touching the second exchange. The second window
-        # then sorts only hot survivors (<= salt x budget rows per HOT key),
-        # so its exchange carries a few thousand rows even when the frontier
-        # has 10^6 cold hosts — blanket salting pays that second shuffle for
-        # every host. Decision is per-epoch and data-driven; identical output
-        # to salted/unsalted by the same pigeonhole argument as below.
-        hot = (
-            pending.groupBy(pol_key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > cfg.hot_host_threshold)
-            .select(pol_key, F.lit(True).alias("_hot"))
-        )
-        pre_w = Window.partitionBy(pol_key, "salt").orderBy(*_ORDER())
-        salted = (
-            pending.join(F.broadcast(hot), pol_key, "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("_hot"),
-                    F.pmod(F.xxhash64("url_norm"), F.lit(salt)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .withColumn("_pre_rank", F.row_number().over(pre_w))
-        )
-        # TWO arms, not three (r4 profiling: each arm re-runs the pre-window
-        # exchange+sort when consumers materialize in separate jobs — the
-        # three-arm form made the adaptive path 2x SLOWER than blanket
-        # salting, 8.3s vs 3.9s on the 4M-row skew probe). Arm A
-        # pre-finalizes everything whose rank is already known: overflow
-        # rows (sentinel rank > budget, provably deferred) AND cold rows
-        # within budget (their (key, 0) pre-window partition IS the per-key
-        # window, so _pre_rank is the true host rank). Arm B = hot
-        # survivors only, bound for the final bounded window.
-        pre_overflow = (
-            salted.filter(
-                (F.col("_pre_rank") > F.col("host_budget")) | F.col("_hot").isNull()
-            )
-            .withColumn(
-                "rank_in_host",
-                F.when(
-                    F.col("_pre_rank") > F.col("host_budget"),
-                    F.col("host_budget") + F.col("_pre_rank"),
-                ).otherwise(F.col("_pre_rank")),
-            )
-            .drop("_hot", "salt", "_pre_rank")
-        )
-        pending = salted.filter(
-            F.col("_hot") & (F.col("_pre_rank") <= F.col("host_budget"))
-        ).drop("_hot", "salt", "_pre_rank")
-    elif salt and salt > 1:
+    if salt and salt > 1:
         pre_w = Window.partitionBy(pol_key, "salt").orderBy(*_ORDER())
         salted = pending.withColumn(
             "salt", F.pmod(F.xxhash64("url_norm"), F.lit(salt)).cast("int")
@@ -232,11 +178,6 @@ def schedule_epoch(
             allowMissingColumns=True,
         )
     return schedule, deferred_next, rejected
-
-
-def crawl_order(schedule: DataFrame) -> DataFrame:
-    """The reproducible crawl order: (epoch, host, rank_in_host)."""
-    return schedule.orderBy("epoch", "host", "rank_in_host")
 
 
 def adaptive_host_stats(

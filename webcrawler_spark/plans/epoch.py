@@ -19,7 +19,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..config import CrawlConfig, DEFAULT_CONFIG
 from ..functions import columns as C
@@ -52,19 +52,6 @@ def _canonical_norm(url):
     return F.coalesce(
         F.when(is_simple_url(url), canonicalize_native(url)["url_norm"]),
         url,
-    )
-
-
-def _empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField("url_fp", LongType(), False),
-                StructField("url_norm", StringType(), False),
-                StructField("host", StringType(), False),
-            ]
-        ),
     )
 
 
@@ -125,14 +112,9 @@ def ingest_candidates(
             .withColumn("url_fp", C.url_fp(F.col("url_norm")))
         )
     merged = D.merge_candidates(canon)
-    if bloom is not None and cfg.seen_filter == "cuckoo":
-        from ..operators import cuckoo as CK
-
-        new = CK.dedupe_new_urls_cuckoo(merged, seen, cuckoo=bloom)
-    else:
-        new = D.dedupe_new_urls(merged, seen, bloom=bloom)
     return (
-        new.withColumn(
+        D.dedupe_new_urls(merged, seen, bloom=bloom)
+        .withColumn(
             "priority",
             C.url_priority(F.col("url_norm"), F.col("depth"), F.col("source_priority")),
         )
@@ -351,6 +333,12 @@ def run_epoch(
 ) -> dict:
     """Run one crawl epoch and commit its snapshot. Returns the counters.
 
+    ``pages_prepared`` must already be persisted AND materialized (the
+    `prepare_pages` output after an action such as ``count()``): the
+    end-of-epoch block cleanup frees every cache registered during the
+    epoch, so a lazily-persisted page table would lose its cache after
+    this call and be re-canonicalized by the next. run_epochs does this.
+
     ``mirror_loser_hosts``: optional one-column (host) dim from
     `operators/mirrors.mirror_losers` — with cfg.collapse_mirrors on,
     pending rows on these hosts are rejected before politeness spends
@@ -375,8 +363,7 @@ def run_epoch(
     seen_prev = cat.read_delta_union("seen", prev)
     deferred_prev = cat.read_snapshot("deferred", prev)
     host_stats_prev = cat.read_snapshot("host_stats", prev)
-    _filter_table = "seen_cuckoo" if cfg.seen_filter == "cuckoo" else "seen_bloom"
-    bloom_prev = cat.read_snapshot(_filter_table, prev) if cfg.use_bloom else None
+    bloom_prev = cat.read_snapshot("seen_bloom", prev) if cfg.use_bloom else None
     if bloom_prev is not None and "nb" not in bloom_prev.columns:
         # pre-bucket-versioning snapshot: bucketed with a different function,
         # so probing it would silently miss every old fingerprint. Treat it
@@ -774,35 +761,23 @@ def run_epoch(
     to_stage: dict[str, DataFrame] = {}
     if cfg.use_bloom:
         # persistent prefilter: fold this epoch's new fingerprints into the
-        # per-bucket blobs (incremental — SURVEY §7 hard-part 3). The cuckoo
-        # variant additionally supports delete_cuckoo for TTL eviction
-        # between epochs (reference's 30-day dedup TTL, indexer/app.py:213).
+        # per-bucket blobs (incremental — SURVEY §7 hard-part 3).
         #
         # Bootstrap guard: if there is no prior filter snapshot but the seen
-        # set has prior epochs (use_bloom enabled mid-run, or seen_filter
-        # switched kinds), the filter must be built from the FULL seen set —
-        # a delta-only filter would hand later epochs false negatives that
-        # bypass the exact anti-join.
+        # set has prior epochs (use_bloom enabled mid-run, or a catalog
+        # written without a seen_bloom snapshot), the filter must be built
+        # from the FULL seen set — a delta-only filter would hand later
+        # epochs false negatives that bypass the exact anti-join.
         filter_fps = seen_delta.select("url_fp")
         if bloom_prev is None and seen_prev is not None:
             filter_fps = seen_prev.select("url_fp").unionByName(filter_fps)
-        if cfg.seen_filter == "cuckoo":
-            from ..operators import cuckoo as CK
-
-            to_stage["seen_cuckoo"] = CK.update_cuckoo(
-                bloom_prev,
-                filter_fps,
-                cfg.bloom_buckets,
-                cfg.bloom_capacity,
-            )
-        else:
-            to_stage["seen_bloom"] = D.update_bloom(
-                bloom_prev,
-                filter_fps,
-                cfg.bloom_buckets,
-                cfg.bloom_capacity,
-                cfg.bloom_fp_rate,
-            )
+        to_stage["seen_bloom"] = D.update_bloom(
+            bloom_prev,
+            filter_fps,
+            cfg.bloom_buckets,
+            cfg.bloom_capacity,
+            cfg.bloom_fp_rate,
+        )
     # Iceberg-SORT-ORDER emulation (opt-in): cluster the frontier/seen
     # deltas by the SURT key so a host/domain-subtree scan prunes on
     # parquet min/max stats instead of reading every file. Additive column

@@ -3646,7 +3646,7 @@ def q_fuzzy_url_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("url_fp", "url_norm", "host", "epoch")
     )
     cands = D.canonicalize(spark.createDataFrame([(u,) for u in cand_urls], "url string"))
-    kept = D.fuzzy_dedupe(cands, seen, CrawlConfig(use_fuzzy=True))
+    kept = D.fuzzy_dedupe(cands, seen, CrawlConfig())
     return kept.select("url_norm").orderBy("url_norm")
 
 

@@ -61,7 +61,7 @@ _EPOCH_COL = {
     "frontier": "status_epoch",
 }
 # tables whose epoch partition is a full *snapshot* (latest wins)
-SNAPSHOT_TABLES = {"deferred", "host_stats", "seen_bloom", "seen_cuckoo"}
+SNAPSHOT_TABLES = {"deferred", "host_stats", "seen_bloom"}
 
 
 class Catalog:

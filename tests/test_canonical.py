@@ -90,6 +90,52 @@ def test_resolution_base_without_path(spark):
     )
 
 
+# ---- epoch index gate ----------------------------------------------------------
+
+
+def test_bound_decl_gate_equals_inline(spark):
+    """run_epoch binds declared_canonical as a `_decl` column of the
+    materialized fetch frame and gates the index on that column. The gate
+    must keep exactly the rows the inline expression (regex over html inside
+    the filter) keeps, for every href form and for pages without a tag."""
+    from webcrawler_spark.plans.epoch import _canonical_norm
+
+    rows = [
+        # (url_norm, html); the label is the last path segment
+        ("https://cn.test/a", _tag("https://cn.test/a")),  # absolute self
+        ("https://cn.test/b", _tag("https://cn.test/a")),  # absolute alias
+        ("https://cn.test/d", _tag("/canon-d")),  # root-relative alias
+        ("https://cn.test/e", _tag("/e")),  # root-relative self
+        ("https://cn.test/f", _tag("//cn.test/f")),  # scheme-relative self
+        ("https://cn.test/g", _tag("//other.test/g")),  # scheme-relative alias
+        ("https://cn.test/dir/p", _tag("p")),  # path-relative self
+        ("https://cn.test/dir/q", _tag("r")),  # path-relative alias
+        # self-canonical in pre-normalization form (http, www., utm param)
+        ("https://cn.test/c", _tag("http://www.cn.test/c?utm_source=x")),
+        # non-simple href (percent-escape): compared raw, not normalized
+        ("https://cn.test/%7Ep", _tag("https://cn.test/%7Ep")),
+        ("https://cn.test/n", "<p>no tag</p>"),
+        ("https://cn.test/z", None),
+    ]
+    df = spark.createDataFrame(rows, "url_norm string, html string")
+    decl = CN.declared_canonical(F.col("url_norm"), F.col("html"))
+
+    def gate(d):
+        return d.isNull() | (_canonical_norm(d) == F.col("url_norm"))
+
+    def kept(frame, d):
+        return {
+            r["url_norm"].rsplit("/", 1)[-1]
+            for r in frame.filter(gate(d)).collect()
+        }
+
+    inline = kept(df, decl)
+    bound = kept(
+        df.withColumn("_decl", decl).localCheckpoint(eager=True), F.col("_decl")
+    )
+    assert bound == inline == {"a", "e", "f", "p", "c", "%7Ep", "n", "z"}
+
+
 # ---- chain / loop collapse ---------------------------------------------------
 
 

@@ -180,7 +180,11 @@ class CrawlConfig:
     # crawling, and Jaccard would dilute below threshold as the canonical
     # side grows. The lexicographically smaller host of each qualifying
     # pair is the canonical representative; the larger is the collapsed
-    # mirror. Off = reference parity (no cross-host roll-up).
+    # mirror. A collapse is permanent: the frozen loser's containment can
+    # only grow, so the gate is monotone and a collapsed host never comes
+    # back, even if its later content diverges. At the default 0.5 a host
+    # half of whose fingerprints a partner shares is dropped with the rest
+    # of its unique content. Off = reference parity (no cross-host roll-up).
     collapse_mirrors: bool = False
     mirror_min_shared: int = 2
     mirror_overlap: float = 0.5

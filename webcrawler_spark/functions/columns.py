@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# ---- fingerprints & hashes (SURVEY §2.2 F3-F8) -------------------------------
+# ---- fingerprints & hashes (SURVEY §2.2 F3, F5, F7) --------------------------
 
 
 def url_fp(url_norm: Column) -> Column:
@@ -20,29 +20,9 @@ def url_fp(url_norm: Column) -> Column:
     return F.xxhash64(url_norm)
 
 
-def url_hash_sha256(url_norm: Column) -> Column:
-    """Exact-parity hash with the reference (deduplicator.py:76-78)."""
-    return F.sha2(url_norm, 256)
-
-
-def fuzzy_hash(host: Column, path: Column) -> Column:
-    """md5(lower(netloc+path)) (deduplicator.py:80-86)."""
-    return F.md5(F.lower(F.concat(host, path)))
-
-
 def content_hash(text: Column) -> Column:
     """sha256 of extracted clean text (parser/app.py:550)."""
     return F.sha2(F.encode(text, "UTF-8"), 256)
-
-
-def raw_content_hash(html: Column) -> Column:
-    """sha256 of raw bytes (fetcher/app.py:446)."""
-    return F.sha2(html, 256)
-
-
-def link_id(source_url: Column, target_url: Column) -> Column:
-    """md5('source-target') (indexer/app.py:479)."""
-    return F.md5(F.concat_ws("-", source_url, target_url))
 
 
 def shard_id(host: Column, n_shards: int) -> Column:
@@ -192,11 +172,6 @@ def robots_allows(
 
 
 # ---- misc ---------------------------------------------------------------------
-
-
-def ready_bucket(ts: Column, bucket_seconds: int = 30) -> Column:
-    """30-second delay bucket (url-scheduler/app.py:45-53) as a column."""
-    return F.floor(F.unix_timestamp(ts) / F.lit(bucket_seconds)).cast("long")
 
 
 _SCHEME_AUTH = "^[a-zA-Z][a-zA-Z0-9+.-]*://"

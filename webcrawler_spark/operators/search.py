@@ -25,21 +25,6 @@ def facet_counts(df: DataFrame, col: str, limit: int) -> DataFrame:
     )
 
 
-def range_facets(df: DataFrame, col: str, edges: list[float], labels: list[str]) -> DataFrame:
-    """ES range aggregation (quality buckets, search-api/app.py:278-287)."""
-    expr = None
-    c = F.col(col)
-    for i, label in enumerate(labels):
-        cond = (c < edges[i]) if i < len(edges) else None
-        if expr is None:
-            expr = F.when(cond, F.lit(label))
-        elif cond is not None:
-            expr = expr.when(cond, F.lit(label))
-        else:
-            expr = expr.otherwise(F.lit(label))
-    return df.groupBy(expr.alias("bucket")).agg(F.count(F.lit(1)).alias("n"))
-
-
 def analytics_overview(df: DataFrame, group_col: str, stat_col: str) -> DataFrame:
     """ES analytics (search-api/app.py:393-459): doc count, cardinality,
     stats agg. Exact countDistinct here so the DuckDB oracle agrees;

@@ -44,9 +44,10 @@ def _canonical_norm(url):
     is provably byte-identical to the full normalizer (urlnorm_native.
     is_simple_url); otherwise keep the raw resolved href — the candidate
     ingest runs every discovered URL through the full normalizer anyway, so
-    this column only has to be right where it is compared against url_norm
-    (the self-canonical index gate) and where it seeds link discovery.
-    Pure codegen, no UDF."""
+    this column only has to be right where it is compared against url_norm,
+    in the self-canonical index gate (its only caller). Pure codegen, no UDF.
+    The expression references ``url`` about 30 times, so pass it a column,
+    not an expression to inline."""
     from ..functions.urlnorm_native import canonicalize_native, is_simple_url
 
     return F.coalesce(
@@ -508,7 +509,21 @@ def run_epoch(
     tele.mark("schedule")
 
     # ---- 4. "fetch" = equi join against the page table (J5 replaces S10 HTTP)
-    fetched = _materialize(schedule.join(pages_prepared, "url_norm", "left"))
+    fetched = schedule.join(pages_prepared, "url_norm", "left")
+    if cfg.respect_canonical:
+        # bind the declared canonical (a regex scan over html) here, behind
+        # the checkpoint, for the index gate below. Inlined into the gate's
+        # _canonical_norm it was copied ~30 times: in the all-opt-ins
+        # benchmark crawl the gate's optimized plan measured 415 KB (21 KB
+        # for the declared href alone), and AQE re-optimized and printed it
+        # at every web_delta stage, 2.4-2.6 s per epoch
+        from ..operators import canonical as CN
+
+        fetched = fetched.withColumn(
+            "_decl",
+            CN.declared_canonical(F.col("url_norm"), F.col("html").cast("string")),
+        )
+    fetched = _materialize(fetched)
     tele.mark("fetch")
     ok = fetched.filter(F.col("html").isNotNull())
 
@@ -602,12 +617,9 @@ def run_epoch(
         # site-declared duplicate: fetched, links followed, never indexed.
         # The declared href is normalized before the self-compare so a page
         # declaring its own pre-normalization URL (http://, www., tracking
-        # params) is still recognized as self-canonical.
-        from ..operators import canonical as CN
-
-        _decl = CN.declared_canonical(
-            F.col("url_norm"), F.col("html").cast("string")
-        )
+        # params) is still recognized as self-canonical. `_decl` is bound
+        # at the fetch materialization.
+        _decl = F.col("_decl")
         indexed = indexed.filter(
             _decl.isNull() | (_canonical_norm(_decl) == F.col("url_norm"))
         )

@@ -1,7 +1,4 @@
-"""CDXJ index sink (sources/cdx.py): sorted shards + cluster.idx lookup."""
-
-import json
-import os
+"""CDXJ index records (sources/cdx.py): the cc-index row projection."""
 
 from webcrawler_spark.sources import cdx as CDX
 
@@ -31,106 +28,3 @@ def test_cdx_records_projection(spark):
     assert r["length"] == len(body.encode())
     assert r["mime"] == "text/html" and r["status"] == 200
     assert r["ts"] == "20260101000001"
-
-
-def test_export_cdx_sorted_shards_and_lookup(spark, tmp_path):
-    out = str(tmp_path / "cdx")
-    recs = CDX.cdx_records(_pages(spark), content_col="content", ts_col="fetch_ts")
-    idx_path = CDX.export_cdx(recs, out, n_shards=4)
-    assert os.path.basename(idx_path) == "cluster.idx"
-
-    idx_lines = [l.rstrip("\n").split("\t") for l in open(idx_path)]
-    assert 1 <= len(idx_lines) <= 4
-    # cluster.idx itself is in key order
-    assert [l[0] for l in idx_lines] == sorted(l[0] for l in idx_lines)
-
-    all_lines = []
-    for first_key, fname, n in idx_lines:
-        shard = [l.rstrip("\n") for l in open(os.path.join(out, fname))]
-        assert len(shard) == int(n)
-        # each shard internally sorted; its first key matches cluster.idx
-        assert shard == sorted(shard)
-        assert shard[0].startswith(first_key)
-        all_lines.extend(shard)
-    # concatenation in cluster.idx order IS the globally sorted index,
-    # covering every input record exactly once
-    assert all_lines == sorted(all_lines)
-    assert len(all_lines) == 40
-    # records are valid CDXJ: "<surt> <ts> <json>"
-    key, ts, payload = all_lines[0].split(" ", 2)
-    meta = json.loads(payload)
-    assert set(meta) == {"digest", "length", "mime", "status", "url"}
-
-    # two-level lookup: every record's surt resolves to the shard that
-    # actually holds it
-    shard_of = {}
-    for first_key, fname, _ in idx_lines:
-        for line in open(os.path.join(out, fname)):
-            shard_of[line.split(" ", 1)[0]] = fname
-    for surt, fname in shard_of.items():
-        assert CDX.lookup_shard(idx_path, surt) == fname
-    # a key before the global minimum has no shard
-    assert CDX.lookup_shard(idx_path, "aaa") is None
-
-
-def test_warc_to_cdx_roundtrip(spark, tmp_path):
-    """Full artifact loop: docs -> WET archives (export_wet) -> read back
-    (pages_from_warc) -> CDX index records. The index digest/length must
-    describe the round-tripped text exactly, and every archived URL gets
-    exactly one index record."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from webcrawler_spark.sources import warc as W
-
-    docs = spark.createDataFrame(
-        [
-            (f"https://site{i % 3}.example.org/doc/{i}", f"wet text body {i} é")
-            for i in range(12)
-        ],
-        "url string, text string",
-    )
-    wet_dir = str(tmp_path / "wet")
-    W.export_wet(docs, wet_dir, n_files=2)
-    pages = W.pages_from_warc(spark, wet_dir + "/*.warc.gz")
-    recs = CDX.cdx_records(
-        pages.withColumn(
-            "fetch_ts", F.date_format("warc_ts", "yyyyMMddHHmmss")
-        ),
-        content_col="text",
-        ts_col="fetch_ts",
-        mime_col=None,
-    ).collect()
-    assert len(recs) == 12
-    by_url = {r["url"]: r for r in recs}
-    for i in range(12):
-        url = f"https://site{i % 3}.example.org/doc/{i}"
-        body = f"wet text body {i} é"
-        r = by_url[url]
-        assert r["digest"] == hashlib.sha256(body.encode()).hexdigest()
-        assert r["length"] == len(body.encode())
-        assert r["ts"] == "20260101000000"
-        assert r["surt"].startswith("org,example,site")
-
-
-def test_cdx_lookup_two_level(spark, tmp_path):
-    """cdx_lookup finds every indexed record by SURT (all timestamps, in
-    order) and returns [] for absent keys — the full two-level query."""
-    out = str(tmp_path / "cdx2")
-    pages = _pages(spark, 30)
-    # duplicate one URL at a second timestamp (a recrawl capture)
-    extra = spark.createDataFrame(
-        [("https://host1.example.com/page/1", "changed body", "20260102000000")],
-        "url string, content string, fetch_ts string",
-    )
-    recs = CDX.cdx_records(
-        pages.unionByName(extra), content_col="content", ts_col="fetch_ts"
-    )
-    CDX.export_cdx(recs, out, n_shards=3)
-    hits = CDX.cdx_lookup(out, "com,example,host1)/page/1")
-    assert [h["ts"] for h in hits] == ["20260101000001", "20260102000000"]
-    assert hits[0]["url"] == "https://host1.example.com/page/1"
-    assert hits[1]["digest"] != hits[0]["digest"]
-    assert CDX.cdx_lookup(out, "com,example,host9)/nope") == []
-    assert CDX.cdx_lookup(out, "aaa") == []

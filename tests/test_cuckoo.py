@@ -6,7 +6,8 @@ deletable filter behind the TTL-eviction contract entry. Invariants tested:
   theory ~0.04%, asserted < 0.5%);
 - delete removes exactly the expired fps while preserving no-false-negatives
   for everything else (the TTL-eviction path a bloom cannot express);
-- incremental update_cuckoo equals a from-scratch build in probe behavior;
+- the broadcast and cogroup probe arms agree row by row, for the cuckoo
+  and the bloom alike (both run the one shared probe);
 - numpy kernels survive saturation pressure (kick loop) deterministically.
 """
 
@@ -105,29 +106,40 @@ def test_build_and_probe_no_false_negatives(spark):
 
 
 def test_probe_fp_rate_and_nonbroadcast_path(spark):
+    """Both probe arms, for the cuckoo and the bloom alike: bounded FP rate
+    on novel fps, no false negatives on members, and the broadcast and
+    cogroup arms' ``might_contain`` equal row by row."""
+    from webcrawler_spark.operators import dedup as D
+
     fps = _fps(30_000, seed=8)
     seen = _seen_df(spark, fps)
-    ck = CK.build_cuckoo(seen, n_buckets=8, capacity=60_000).persist()
     novel = np.setdiff1d(_fps(30_000, seed=9), fps)
-    cand = _seen_df(spark, novel)
-    for bc in (True, False):
-        hits = (
-            CK.cuckoo_might_contain(cand, ck, broadcast_blobs=bc)
-            .filter(F.col("might_contain"))
-            .count()
-        )
-        assert hits / len(novel) < 0.005
-    ck.unpersist()
-
-
-def test_update_equals_rebuild(spark):
-    a, b = _fps(10_000, seed=10), _fps(10_000, seed=11)
-    ck0 = CK.build_cuckoo(_seen_df(spark, a), n_buckets=4, capacity=40_000)
-    ck1 = CK.update_cuckoo(ck0, _seen_df(spark, b), n_buckets=4, capacity=40_000)
-    both = _seen_df(spark, np.union1d(a, b))
-    assert (
-        CK.cuckoo_might_contain(both, ck1).filter(~F.col("might_contain")).count() == 0
-    )
+    members = fps[:5_000]
+    cand = _seen_df(spark, np.concatenate([novel, members]))
+    filters = {
+        "cuckoo": (
+            CK.build_cuckoo(seen, n_buckets=8, capacity=60_000),
+            CK.cuckoo_might_contain,
+        ),
+        "bloom": (
+            D.build_bloom(seen, n_buckets=8, capacity=60_000, fp_rate=0.001),
+            D.bloom_might_contain,
+        ),
+    }
+    for kind, (blobs, probe) in filters.items():
+        blobs = blobs.persist()
+        arms = {}
+        for bc in (True, False):
+            got = {
+                r["url_fp"]: r["might_contain"]
+                for r in probe(cand, blobs, broadcast_blobs=bc).collect()
+            }
+            assert len(got) == len(novel) + len(members)
+            assert sum(got[int(f)] for f in novel) / len(novel) < 0.005, (kind, bc)
+            assert all(got[int(f)] for f in members), (kind, bc)
+            arms[bc] = got
+        assert arms[True] == arms[False], kind
+        blobs.unpersist()
 
 
 def test_build_adaptive_blob_sizing_never_overflows(spark):
@@ -141,39 +153,11 @@ def test_build_adaptive_blob_sizing_never_overflows(spark):
     assert all(r["m"] > CK._table_size(100 // 4) for r in ck.select("m").collect())
 
 
-def test_update_over_capacity_fails_fast_with_clear_error(spark):
-    """Inserting a delta that would overfill an existing blob must surface a
-    plan-level capacity error (lossy tags cannot be rehashed bigger in
-    place), not die deep in the kick loop."""
-    import re
-
-    a = _fps(400, seed=21)
-    ck = CK.build_cuckoo(_seen_df(spark, a), n_buckets=1, capacity=400).persist()
-    big_delta = _seen_df(spark, np.setdiff1d(_fps(30_000, seed=22), a))
-    with pytest.raises(Exception, match=re.escape("over capacity")):
-        CK.update_cuckoo(ck, big_delta, n_buckets=1, capacity=400).collect()
-    ck.unpersist()
-
-
-def test_update_advisory_band_succeeds(spark):
-    """A delta that lands the blob between the 95% advisory load factor and
-    100% must be placed by the kick loop, not rejected by the capacity
-    pre-check (the pre-check fails fast only on projections that cannot
-    possibly fit). 400 build + 90 delta = 490 of 512 slots (95.7%)."""
-    a = _fps(420, seed=31)[:400]
-    delta = np.setdiff1d(_fps(600, seed=32), a)[:90]
-    ck = CK.build_cuckoo(_seen_df(spark, a), n_buckets=1, capacity=400).persist()
-    ck2 = CK.update_cuckoo(ck, _seen_df(spark, delta), n_buckets=1, capacity=400)
-    probe = CK.cuckoo_might_contain(_seen_df(spark, delta), ck2)
-    assert probe.filter(~F.col("might_contain")).count() == 0
-    ck.unpersist()
-
-
 def test_delete_ttl_eviction(spark):
     fps = _fps(10_000, seed=12)
     expired, live = fps[:4_000], fps[4_000:]
     ck = CK.build_cuckoo(_seen_df(spark, fps), n_buckets=4, capacity=20_000)
-    ck2 = CK.delete_cuckoo(ck, _seen_df(spark, expired), n_buckets=4, capacity=20_000)
+    ck2 = CK.delete_cuckoo(ck, _seen_df(spark, expired), n_buckets=4)
     live_df = _seen_df(spark, live)
     assert (
         CK.cuckoo_might_contain(live_df, ck2).filter(~F.col("might_contain")).count()
@@ -207,17 +191,16 @@ def test_sparse_bucket_population_no_false_negatives(spark):
 
 
 def test_update_with_mismatched_n_buckets_stays_correct(spark):
-    """Regression: incremental update/delete must bucket the delta with the
-    EXISTING table's modulus, not the caller's — a mismatched n_buckets
-    would scatter fps into blobs the probe never consults."""
+    """Regression: the bloom's incremental update and the cuckoo's TTL
+    delete must bucket the delta with the EXISTING table's modulus, not the
+    caller's — a mismatched n_buckets would scatter fps into blobs the probe
+    never consults."""
     from webcrawler_spark.operators import dedup as D
 
     a, b = _fps(5_000, seed=20), _fps(5_000, seed=21)
-    ck0 = CK.build_cuckoo(_seen_df(spark, a), n_buckets=8, capacity=20_000)
-    ck1 = CK.update_cuckoo(ck0, _seen_df(spark, b), n_buckets=3, capacity=20_000)
     both = _seen_df(spark, np.union1d(a, b))
-    assert CK.cuckoo_might_contain(both, ck1).filter(~F.col("might_contain")).count() == 0
-    ck2 = CK.delete_cuckoo(ck1, _seen_df(spark, b), n_buckets=5, capacity=20_000)
+    ck = CK.build_cuckoo(both, n_buckets=8, capacity=20_000)
+    ck2 = CK.delete_cuckoo(ck, _seen_df(spark, b), n_buckets=5)
     assert CK.cuckoo_might_contain(_seen_df(spark, a), ck2).filter(~F.col("might_contain")).count() == 0
 
     bl0 = D.build_bloom(_seen_df(spark, a), n_buckets=8, capacity=20_000, fp_rate=0.001)

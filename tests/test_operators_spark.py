@@ -975,33 +975,6 @@ def test_search_min_should_match_threshold(spark):
     assert got3 == {1}
 
 
-def test_canonical_groups(spark):
-    """rel=canonical collapse: pages group under their declared target
-    (one hop), the target is representative when crawled, else the
-    smallest member; undeclared pages form singleton groups."""
-    from webcrawler_spark.operators.dedup import canonical_groups
-
-    pages = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("d",), ("e",)], "url_norm string"
-    )
-    links = spark.createDataFrame(
-        [
-            ("b", "a", "canonical"),
-            ("c", "a", "canonical"),
-            ("d", "x", "canonical"),   # target never crawled
-            ("b", "zzz", "internal"),  # non-canonical links ignored
-        ],
-        "source_url string, target_url string, link_type string",
-    )
-    out = {r["url_norm"]: r for r in canonical_groups(pages, links).collect()}
-    assert out["a"]["rep_url"] == "a" and out["a"]["is_rep"]
-    assert out["b"]["canonical_url"] == "a" and out["b"]["rep_url"] == "a" and not out["b"]["is_rep"]
-    assert out["c"]["rep_url"] == "a"
-    # declared target x was never crawled: smallest member (d) represents
-    assert out["d"]["canonical_url"] == "x" and out["d"]["rep_url"] == "d" and out["d"]["is_rep"]
-    assert out["e"]["rep_url"] == "e" and out["e"]["is_rep"]  # singleton
-
-
 def test_meta_robots_flags_variants(spark):
     """<meta name=robots> parsing: quote styles, attribute order, case,
     whitespace, multi-tag restrictive combining, and non-robots decoys."""

@@ -175,41 +175,50 @@ def test_global_budget_drain_no_full_sort(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_bloom_probe_broadcast_path_has_no_join(spark):
-    """The broadcast bloom probe must be a zero-join plan: the blob dict
+def _blob_filter(kind, seen):
+    """(blob table, probe) for either bucketed seen-set filter; both probes
+    run the one shared two-arm blob probe in operators/dedup.py."""
+    from webcrawler_spark.operators import cuckoo as CK
+    from webcrawler_spark.operators import dedup as D
+
+    if kind == "bloom":
+        blobs = D.build_bloom(seen, n_buckets=8, capacity=4000, fp_rate=0.001)
+        return blobs, D.bloom_might_contain
+    return CK.build_cuckoo(seen, n_buckets=8, capacity=4000), CK.cuckoo_might_contain
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_bloom_probe_broadcast_path_has_no_join(spark, kind):
+    """The broadcast blob probe must be a zero-join plan: the blob dict
     rides an sc.broadcast inside the pandas UDF, so the candidate stream is
     scan -> ArrowEvalPython -> project. Any Join/Exchange here means the
     multi-MB blobs are being copied onto candidate rows — the exact plan
     shape the probe rework removed."""
-    from webcrawler_spark.operators import dedup as D
-
     seen = spark.range(2000).select(F.col("id").alias("url_fp"))
-    bloom = D.build_bloom(seen, n_buckets=8, capacity=4000, fp_rate=0.001)
-    probed = D.bloom_might_contain(
-        spark.range(500).select(F.col("id").alias("url_fp")), bloom
-    )
-    plan = plan_str(probed)
-    assert "ArrowEvalPython" in plan
+    blobs, probe = _blob_filter(kind, seen)
+    probed = probe(spark.range(500).select(F.col("id").alias("url_fp")), blobs)
+    plan = plan_str(probed, mode="simple")
+    assert plan.count("ArrowEvalPython") == 1
     assert "Join" not in plan and "Exchange" not in plan
 
 
-def test_bloom_probe_cogroup_path_single_bucket_shuffle(spark):
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_bloom_probe_cogroup_path_single_bucket_shuffle(spark, kind):
     """The 10^10-fp probe path shuffles BOTH sides once on bucket into a
     cogrouped FlatMapCoGroupsInPandas — no join, no broadcast of blobs, and
     exactly two exchanges (candidates + blob table), each hashpartitioned
     on bucket."""
-    from webcrawler_spark.operators import dedup as D
-
     seen = spark.range(2000).select(F.col("id").alias("url_fp"))
-    bloom = D.build_bloom(seen, n_buckets=8, capacity=4000, fp_rate=0.001).persist()
-    bloom.count()  # materialize so the build's own shuffle is not in the probe plan
-    probed = D.bloom_might_contain(
+    blobs, probe = _blob_filter(kind, seen)
+    blobs = blobs.persist()
+    blobs.count()  # materialize so the build's own shuffle is not in the probe plan
+    probed = probe(
         spark.range(500).select(F.col("id").alias("url_fp")),
-        bloom,
+        blobs,
         broadcast_blobs=False,
     )
     plan = plan_str(probed, mode="simple")
-    bloom.unpersist()
+    blobs.unpersist()
     assert "FlatMapCoGroupsInPandas" in plan
     assert "Join" not in plan
     # the cached relation echoes its own build plan below InMemoryRelation;

@@ -71,36 +71,3 @@ def test_no_python_udf_in_plan(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_rules_dim_from_file_official_format(spark, tmp_path):
-    """parse_psl_file reads the official public_suffix_list.dat syntax —
-    `//` comments (incl. ICANN/PRIVATE section markers), blank lines,
-    trailing annotations after whitespace, `!` exceptions, `*.` wildcards,
-    a literal `*` default rule (skipped: the no-match fallback implements
-    it) — and the loaded dim resolves the official vectors identically to
-    the bundled snapshot. Deploying the real ~9k-rule list is this one
-    file drop."""
-    dat = tmp_path / "public_suffix_list.dat"
-    lines = ["// ===BEGIN ICANN DOMAINS===", ""]
-    for rule, kind in PS.PSL_SNAPSHOT:
-        if kind == "exception":
-            lines.append(f"!{rule}")
-        elif kind == "wildcard":
-            lines.append(f"*.{rule}")
-        elif rule == "blogspot.com":
-            lines += ["// ===END ICANN DOMAINS===",
-                      "// ===BEGIN PRIVATE DOMAINS===",
-                      f"{rule}  // trailing annotation"]
-        else:
-            lines.append(rule.upper())  # loader lowercases
-    lines += ["*", "", "// ===END PRIVATE DOMAINS==="]
-    dat.write_text("\n".join(lines) + "\n", encoding="utf-8")
-
-    assert sorted(PS.parse_psl_file(str(dat))) == sorted(PS.PSL_SNAPSHOT)
-
-    hosts = spark.createDataFrame([(h,) for h, _ in VECTORS], "host string")
-    out = PS.registrable_domain(hosts, PS.rules_dim_from_file(spark, str(dat)), "host")
-    got = {r["host"]: r["registrable"] for r in out.collect()}
-    for host, want in VECTORS:
-        assert got[host] == want, f"{host}: got {got[host]}, want {want}"

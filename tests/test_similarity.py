@@ -138,15 +138,6 @@ def test_media_features_shape(spark):
         assert r["n_bytes"] > 0
 
 
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [(2, "video", b"x", 64, 64, 2500), (3, "image", b"y", 64, 64, 0)],
-        MM.MEDIA_SCHEMA,
-    )
-    frames = MM.frame_sample_plan(media, every_ms=1000).collect()
-    assert [(r["media_id"], r["frame_ts_ms"]) for r in frames] == [(2, 0), (2, 1000), (2, 2000)]
-
-
 def test_ivf_topk_recall(spark):
     """IVF with nprobe=4/16 must recover most of the brute-force top-10 on
     the clustered synthetic embeddings (deterministic: fixed init + data)."""
@@ -267,48 +258,16 @@ def test_lang_margin_confidence(spark):
     assert out[3] == ("und", 0)
 
 
-def test_resize_media_plumbing(spark):
-    """Aspect-fit dims: never upscale, floor-of-1, audio passthrough; the
-    mapInPandas stage carries dims + payload; the real-codec slot raises."""
-    import pytest as _pytest
-
-    from webcrawler_spark.operators.multimodal import resize_media
-
-    rows = [
-        (1, "image", 3840, 2160, b"\x01" * 8),   # downscale 6x -> 640x360
-        (2, "image", 320, 200, b"\x02" * 8),     # smaller than box: untouched
-        (3, "image", 10000, 2, b"\x03" * 8),     # extreme aspect -> floor 1
-        (4, "audio", 999, 777, b"\x04" * 8),     # audio passthrough
-        (5, "video", 1280, 960, b"\x05" * 8),    # 0.5 scale exact
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, kind string, width int, height int, payload binary"
-    )
-    out = {r["media_id"]: r for r in resize_media(df, 640, 480).collect()}
-    assert (out[1]["target_w"], out[1]["target_h"]) == (640, 360)
-    assert (out[2]["target_w"], out[2]["target_h"]) == (320, 200)
-    assert (out[3]["target_w"], out[3]["target_h"]) == (640, 1)
-    assert (out[4]["target_w"], out[4]["target_h"]) == (999, 777)
-    assert (out[5]["target_w"], out[5]["target_h"]) == (640, 480)
-    assert out[1]["payload"] == b"\x01" * 8  # stub passthrough
-    with _pytest.raises(Exception, match="NotImplementedError|resample"):
-        resize_media(df, 640, 480, decode_stub=False).collect()
-
-
 def test_media_real_decode_with_pil(spark):
-    """When PIL is importable the decode_stub=False path is REAL: images
-    decode, resample to the aspect-fit dims, re-encode; features are a
-    luminance histogram over actual pixels. Skipped where PIL is absent
-    (this container — the stub path above is the tested default there)."""
+    """When PIL is importable the decode_stub=False path is REAL: image
+    features are a luminance histogram over actual pixels. Skipped where
+    PIL is absent (the stub path above is then the tested default)."""
     import io
 
     import pytest as _pytest
 
     Image = _pytest.importorskip("PIL.Image")
-    from webcrawler_spark.operators.multimodal import (
-        extract_media_features,
-        resize_media,
-    )
+    from webcrawler_spark.operators.multimodal import extract_media_features
 
     def png(w, h, color):
         buf = io.BytesIO()
@@ -320,12 +279,6 @@ def test_media_real_decode_with_pil(spark):
          (2, "image", 100, 100, png(100, 100, (0, 0, 0)))],
         "media_id long, kind string, width int, height int, payload binary",
     )
-    out = {r["media_id"]: r for r in
-           resize_media(df, 640, 480, decode_stub=False).collect()}
-    got = Image.open(io.BytesIO(out[1]["payload"]))
-    assert got.size == (640, 480)  # actually resampled, not passthrough
-    assert Image.open(io.BytesIO(out[2]["payload"])).size == (100, 100)
-
     feats = {r["media_id"]: r["feature"] for r in
              extract_media_features(df, dim=16, decode_stub=False).collect()}
     # all-white image -> all luminance mass in the top bin; black -> bottom

@@ -35,22 +35,6 @@ def _spans_py(docs, n=8, stride=1):
     return out
 
 
-def _strip_py(docs, spans):
-    by_doc = {}
-    for d, s, e in spans:
-        by_doc.setdefault(d, []).append((s, e))
-    out = {}
-    for d, t in docs:
-        ts = re.split(r"\s+", t.lower())
-        keep = [
-            tok
-            for i, tok in enumerate(ts)
-            if not any(s <= i < e for s, e in by_doc.get(d, []))
-        ]
-        out[d] = " ".join(keep)
-    return out
-
-
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
 
 
@@ -85,24 +69,6 @@ def test_spans_match_python_reference(spark, n, stride):
         assert any(d == 1 for d, _, _ in got) and any(d == 3 for d, _, _ in got)
 
 
-def test_strip_spans_matches_python_reference(spark):
-    docs = _corpus()
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    spans = SU.duplicate_ngram_spans(df, n=8)
-    got = {
-        r["doc_id"]: r["clean_text"]
-        for r in SU.strip_spans(df, spans).collect()
-    }
-    ref_spans = _spans_py(docs, n=8)
-    ref = _strip_py(docs, ref_spans)
-    assert got == ref
-    # untouched docs pass through (modulo lowercase+single-space normalize)
-    assert got[0] == docs[0][1].lower()
-    # cleaned docs no longer contain the planted run
-    run = " ".join(WORDS + WORDS[:2])
-    assert run not in got[1] and run not in got[3]
-
-
 def test_spans_random_corpus_parity(spark):
     """Seeded random corpus (repeated templates + noise, varied lengths,
     sub-n docs) — full span-set parity with the Python reference."""
@@ -129,40 +95,3 @@ def test_spans_random_corpus_parity(spark):
     }
     assert got == _spans_py(docs, n=6)
     assert len(got) > 20  # templates actually collided
-
-
-def test_write_corpus_shards_roundtrip(spark, tmp_path):
-    """Export sink: JSONL shards partitioned by (source, shard); read-back
-    equals the input and every shard directory respects the token budget
-    (first doc of a shard may cross it, per pack_shards semantics)."""
-    from pyspark.sql import Row
-
-    from webcrawler_spark.operators import corpus as C
-
-    docs = spark.createDataFrame(
-        [
-            Row(
-                doc_id=i,
-                source=("web" if i % 2 else "books"),
-                text=("tok " * (i % 7 + 1)).strip(),
-            )
-            for i in range(40)
-        ]
-    )
-    out = str(tmp_path / "shards")
-    packed = C.write_corpus_shards(docs, out, budget_tokens=10)
-    back = spark.read.json(out)
-    assert back.count() == 40
-    assert set(back.columns) >= {"doc_id", "text", "source", "shard_in_source"}
-    # read-back text matches input exactly
-    orig = {r["doc_id"]: r["text"] for r in docs.collect()}
-    for r in back.collect():
-        assert r["text"] == orig[r["doc_id"]]
-    # shard budgets: tokens before the last doc of each shard stay < budget
-    import collections
-
-    per = collections.defaultdict(list)
-    for r in packed.orderBy("source", "doc_id").collect():
-        per[(r["source"], r["shard_in_source"])].append(r["n_tokens"])
-    for toks in per.values():
-        assert sum(toks[:-1]) < 10

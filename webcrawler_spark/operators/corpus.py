@@ -518,36 +518,6 @@ def bpe_sequence_plan(
     )
 
 
-def write_corpus_shards(
-    docs: DataFrame,
-    path: str,
-    budget_tokens: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fmt: str = "json",
-) -> DataFrame:
-    """The export sink completing the pack_shards story: assign
-    token-budget shards, then write the corpus partitioned by
-    (source, shard_in_source) as JSONL (the interchange format LLM
-    trainers consume) or parquet.
-
-    100 TB shape: `partitionBy` writes one directory per (source, shard)
-    with no extra shuffle beyond pack_shards' per-source window — each
-    writer task streams its partition. Returns the packed frame (doc_id,
-    source, n_tokens, shard_in_source) so callers can assert manifests.
-    """
-    packed = pack_shards(docs, budget_tokens, source_col, id_col, text_col)
-    out = docs.join(packed.select(id_col, "shard_in_source"), id_col)
-    (
-        out.write.mode("overwrite")
-        .partitionBy(source_col, "shard_in_source")
-        .format(fmt)
-        .save(path)
-    )
-    return packed
-
-
 def weighted_sample(
     docs: DataFrame,
     weight_col: str,

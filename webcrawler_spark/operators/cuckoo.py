@@ -10,8 +10,7 @@ bloom filter cannot delete — supporting TTL eviction there means periodic
 full rebuilds over the 10^10-fp seen set. A cuckoo filter (Fan et al.,
 "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014) deletes in O(1)
 per fingerprint, so TTL expiry becomes a small delta job against only the
-touched buckets (build_cuckoo / update_cuckoo / cuckoo_might_contain /
-delete_cuckoo).
+touched buckets (build_cuckoo / cuckoo_might_contain / delete_cuckoo).
 
 Layout mirrors the bloom: the fp space is split into ``n_buckets`` blobs by
 ``dedup.bucket_of`` (xxhash64-remixed pmod); each blob is an independent cuckoo table of
@@ -19,7 +18,8 @@ Layout mirrors the bloom: the fp space is split into ``n_buckets`` blobs by
 ~1.05 bytes/key less overhead than a 0.1%-FP bloom while adding deletion.
 At 10^10 fps the whole filter is ~25 GB split across 2048 blobs of ~12 MB —
 each blob far under the 2 GB Arrow limit, probe-able either broadcast or as
-a shuffle join on the bucket key (same two paths as bloom_might_contain).
+a shuffle join on the bucket key (the probe is the bloom's own two-arm
+``dedup._probe_blobs`` with a cuckoo decoder).
 
 All per-blob work is numpy-vectorized inside Arrow-batched pandas UDFs
 (grouped-map / cogrouped-map); the only per-row Python is the cuckoo kick
@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import bucket_of
+from .dedup import _probe_blobs, _table_n_buckets, bucket_of
 
 _SLOTS = 4
 _LOAD_FACTOR = 0.84  # 4-slot tables fill reliably to ~95%; 0.84 leaves kick headroom
@@ -130,10 +130,9 @@ def _kick_insert(table, tag: int, i: int, m: int) -> None:
             _alt_index(np.array([i], dtype=np.int64), np.array([victim], dtype=np.uint16), m)[0]
         )
     raise ValueError(
-        f"cuckoo blob over capacity after {_MAX_KICKS} kicks — the seen set "
-        "outgrew the configured capacity. Rebuild the filter from the full "
-        "seen set (build_cuckoo sizes blobs adaptively) or raise "
-        "CrawlConfig.bloom_capacity/bloom_buckets."
+        f"cuckoo blob over capacity after {_MAX_KICKS} kicks — the table is "
+        "too small for its fps. Build the filter with build_cuckoo, which "
+        "sizes each blob to its bucket's row count."
     )
 
 
@@ -145,10 +144,9 @@ def _insert_fps(table, fps) -> None:
     (bucket, tag) each occupy a physical slot, so a later TTL delete of one
     removes one copy and the other still probes positive — skipping would
     turn every such collision into a false negative after eviction (the
-    standard cuckoo-filter deletion-safety rule, Fan et al. §3.2). Within
-    one call fps are np.unique'd, and the epoch loop offers each fp exactly
-    once across epochs (deltas are pre-deduped by the anti-join), so
-    duplicate copies arise only from genuine tag collisions."""
+    standard cuckoo-filter deletion-safety rule, Fan et al. §3.2). fps are
+    np.unique'd first, so duplicate copies arise only from genuine tag
+    collisions."""
     import numpy as np
 
     m = table.shape[0]
@@ -235,67 +233,33 @@ def build_cuckoo(seen: DataFrame, n_buckets: int, capacity: int) -> DataFrame:
     )
 
 
-def _apply_delta(
-    cuckoo: DataFrame, fps: DataFrame, n_buckets: int, capacity: int, op: str
-) -> DataFrame:
-    """Cogrouped-map over (existing blobs) x (fp delta) keyed by bucket:
-    each task sees one bucket's blob plus that bucket's delta rows and
+def delete_cuckoo(cuckoo: DataFrame, expired_fps: DataFrame, n_buckets: int) -> DataFrame:
+    """TTL eviction (indexer/app.py:213 30-day expiry): remove expired
+    fingerprints in place — the operation a bloom cannot do.
+
+    Cogrouped-map over (existing blobs) x (expired fps) keyed by bucket:
+    each task sees one bucket's blob plus that bucket's expired rows and
     rewrites only that blob. Untouched buckets pass through with an empty
-    delta side; epoch cost is O(|delta| + touched blobs), never a rebuild."""
-    m_default = _table_size(max(capacity // n_buckets, 1))
+    delta side, so the cost is O(|expired| + touched blobs), never a
+    rebuild. The table's own nb is authoritative over ``n_buckets``:
+    bucketing the delta with a different modulus would miss the blobs that
+    hold the fps."""
+    n_buckets = _table_n_buckets(cuckoo) or n_buckets
 
     def _merge(blobs: pd.DataFrame, delta: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(blobs):
-            bucket = int(blobs["bucket"].iloc[0])
-            m = int(blobs["m"].iloc[0])
-            table = _blob_to_table(blobs["blob"].iloc[0], m)
-        else:
-            if op == "delete" or not len(delta):
-                return pd.DataFrame({"bucket": [], "blob": [], "m": []}).astype(
-                    {"bucket": "int32", "m": "int32"}
-                )
-            bucket = int(delta["bucket"].iloc[0])
-            # fresh bucket: size adaptively like build_cuckoo — never
-            # under-allocate a hot bucket's first blob
-            m = max(m_default, _table_size(len(np.unique(delta["url_fp"].to_numpy()))))
-            table = _new_table(m)
+        if not len(blobs):
+            return pd.DataFrame({"bucket": [], "blob": [], "m": []}).astype(
+                {"bucket": "int32", "m": "int32"}
+            )
+        m = int(blobs["m"].iloc[0])
+        table = _blob_to_table(blobs["blob"].iloc[0], m)
         if len(delta):
-            fp_arr = delta["url_fp"].to_numpy()
-            if op == "insert":
-                # Capacity pre-check BEFORE mutating: partial-key tags are
-                # lossy, so an existing blob cannot be rehashed into a
-                # bigger table in place — fail fast with an actionable
-                # plan-level error instead of dying mid-kick-loop with the
-                # blob half-written (a long crawl outgrowing
-                # cfg.bloom_capacity hits this; the bloom merely degrades
-                # its FP rate, the cuckoo must say so explicitly).
-                # The projection is EXACT, not an estimate: _insert_fps
-                # places one slot per unique delta fp even when the tag is
-                # already present (deletion-safety duplicate copies, see its
-                # docstring), so occupied + |unique(delta)| is the true
-                # post-insert count. Only a projection that cannot possibly
-                # fit fails fast here; between the 95% advisory load factor
-                # and 100% the kick loop is the arbiter — it raises its own
-                # actionable error only if placement genuinely fails (a
-                # 4-slot table routinely fills to ~95-98%).
-                projected = int(np.count_nonzero(table)) + len(np.unique(fp_arr))
-                if projected > int(m * _SLOTS):
-                    raise ValueError(
-                        f"cuckoo bucket {bucket} over capacity: {projected} "
-                        f"projected tags for {m}x{_SLOTS} slots. The seen "
-                        "set outgrew the configured capacity — rebuild the "
-                        "filter from the full seen set (build_cuckoo sizes "
-                        "blobs adaptively) or raise "
-                        "CrawlConfig.bloom_capacity/bloom_buckets."
-                    )
-                _insert_fps(table, fp_arr)
-            else:
-                _delete_fps(table, fp_arr)
-        return pd.DataFrame({"bucket": [bucket], "blob": [table.tobytes()], "m": [m]})
+            _delete_fps(table, delta["url_fp"].to_numpy())
+        return pd.DataFrame(
+            {"bucket": [int(blobs["bucket"].iloc[0])], "blob": [table.tobytes()], "m": [m]}
+        )
 
-    delta = fps.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
+    delta = expired_fps.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
     return (
         cuckoo.drop("nb")
         .groupBy("bucket")
@@ -305,111 +269,17 @@ def _apply_delta(
     )
 
 
-def update_cuckoo(
-    cuckoo: DataFrame | None, new_fps: DataFrame, n_buckets: int, capacity: int
-) -> DataFrame:
-    """Incremental insert of an epoch's seen-delta (the growing-set path,
-    mirror of dedup.update_bloom)."""
-    if cuckoo is None:
-        return build_cuckoo(new_fps, n_buckets, capacity)
-    # the existing table's bucket modulus is authoritative: bucketing the
-    # delta with a different n_buckets would scatter fps into blobs the
-    # probe never consults (false negatives)
-    from .dedup import _table_n_buckets
+def _cuckoo_contains(row, fps):
+    import numpy as np
 
-    existing_nb = _table_n_buckets(cuckoo)
-    if existing_nb:
-        n_buckets = existing_nb
-    return _apply_delta(cuckoo, new_fps, n_buckets, capacity, "insert")
-
-
-def delete_cuckoo(
-    cuckoo: DataFrame, expired_fps: DataFrame, n_buckets: int, capacity: int
-) -> DataFrame:
-    """TTL eviction (indexer/app.py:213 30-day expiry): remove expired
-    fingerprints in place — the operation a bloom cannot do."""
-    from .dedup import _table_n_buckets
-
-    existing_nb = _table_n_buckets(cuckoo)
-    if existing_nb:
-        n_buckets = existing_nb
-    return _apply_delta(cuckoo, expired_fps, n_buckets, capacity, "delete")
+    table = np.frombuffer(row["blob"], dtype=np.uint16).reshape(int(row["m"]), _SLOTS)
+    return _contains_fps(table, fps)
 
 
 def cuckoo_might_contain(
     candidates: DataFrame, cuckoo: DataFrame, broadcast_blobs: bool = True
 ) -> DataFrame:
-    """Probe: adds boolean ``might_contain`` (false => definitely new).
-
-    Two paths, both shipping each blob ONCE per task (never once per row —
-    a blob-join would duplicate the multi-MB blob onto every candidate row
-    and push gigabytes through the Arrow boundary):
-
-    - ``broadcast_blobs=True`` (default): the blob table is collected into a
-      real ``sc.broadcast`` dict keyed by bucket; the probe is a scalar
-      pandas UDF over (fp, bucket) with zero joins. Right up to blob tables
-      of a few GB (~10^9 fps).
-    - ``False``: candidates shuffle by bucket into a cogrouped-map with the
-      blob side — each task sees one bucket's blob plus its candidates.
-      The 10^10-fp path."""
-    from .dedup import _table_n_buckets
-
-    n_buckets = _table_n_buckets(cuckoo) or 1
-    cuckoo = cuckoo.drop("nb")  # no-op on pre-nb snapshots
-
-    if broadcast_blobs:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import BooleanType
-
-        blob_map = {
-            int(r["bucket"]): (r["blob"], int(r["m"])) for r in cuckoo.collect()
-        }
-        bmap = candidates.sparkSession.sparkContext.broadcast(blob_map)
-
-        @pandas_udf(BooleanType())
-        def _probe(fp: pd.Series, bucket: pd.Series) -> pd.Series:
-            import numpy as np
-
-            out = np.zeros(len(fp), dtype=bool)
-            if len(fp):
-                fps = fp.to_numpy()
-                bks = bucket.to_numpy()
-                for b in np.unique(bks):
-                    entry = bmap.value.get(int(b))
-                    if entry is None:
-                        continue
-                    blob, m = entry
-                    table = np.frombuffer(blob, dtype=np.uint16).reshape(m, _SLOTS)
-                    mask = bks == b
-                    out[mask] = _contains_fps(table, fps[mask])
-            return pd.Series(out)
-
-        return candidates.withColumn(
-            "might_contain",
-            _probe(F.col("url_fp"), bucket_of(F.col("url_fp"), n_buckets)),
-        )
-
-    out_fields = candidates.schema.fields
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-    out_schema += ", might_contain boolean"
-
-    def _probe_group(cands: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        cands = cands.drop(columns=["bucket"])
-        if len(blobs) == 0 or len(cands) == 0:
-            cands["might_contain"] = False
-            return cands
-        table = np.frombuffer(blobs["blob"].iloc[0], dtype=np.uint16).reshape(
-            int(blobs["m"].iloc[0]), _SLOTS
-        )
-        cands["might_contain"] = _contains_fps(table, cands["url_fp"].to_numpy())
-        return cands
-
-    bucketed = candidates.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
-    return (
-        bucketed.groupBy("bucket")
-        .cogroup(cuckoo.groupBy("bucket"))
-        .applyInPandas(_probe_group, schema=out_schema)
-    )
-
+    """Probe the cuckoo filter: adds boolean ``might_contain`` (false =>
+    definitely new) through the same two-arm blob probe as the bloom
+    (``dedup._probe_blobs``)."""
+    return _probe_blobs(candidates, cuckoo, _cuckoo_contains, broadcast_blobs)

@@ -229,29 +229,33 @@ def update_bloom(
     )
 
 
-def bloom_might_contain(
-    candidates: DataFrame, bloom: DataFrame, broadcast_blobs: bool = True
+def _probe_blobs(
+    candidates: DataFrame, blobs: DataFrame, contains, broadcast_blobs: bool
 ) -> DataFrame:
-    """Probe: adds boolean ``might_contain`` (false => definitely new).
+    """Shared probe of a bucketed blob filter (bloom or cuckoo): adds boolean
+    ``might_contain`` (false => definitely new). ``contains(blob_row, fps)``
+    answers one bucket's fps (int64 ndarray) against that bucket's blob row
+    (a mapping with the table's blob, m, ... columns) as a bool ndarray.
 
-    Blobs ship once per task, never once per row: the broadcast path uses a
-    real ``sc.broadcast`` dict keyed by bucket (zero joins — a blob-join
-    would duplicate the multi-MB blob onto every candidate row and push
-    gigabytes through Arrow); the ``broadcast_blobs=False`` path shuffles
-    candidates by bucket into a cogrouped-map with the blob side — each
-    task sees one bucket's blob plus its candidates (the 10^10-fp path;
-    see SCALE.md §3)."""
-    n_buckets = _table_n_buckets(bloom) or 1
-    bloom = bloom.drop("nb")  # no-op on pre-nb snapshots
+    Each blob ships ONCE per task, never once per row — a blob-join would
+    duplicate the multi-MB blob onto every candidate row and push gigabytes
+    through the Arrow boundary:
+
+    - ``broadcast_blobs=True``: the blob table is collected into a real
+      ``sc.broadcast`` dict keyed by bucket; the probe is one scalar pandas
+      UDF over (fp, bucket) with zero joins. Right up to blob tables of a
+      few GB (~10^9 fps).
+    - ``False``: candidates shuffle by bucket into a cogrouped-map with the
+      blob side — each task sees one bucket's blob plus its candidates.
+      The 10^10-fp path (SCALE.md §3)."""
+    n_buckets = _table_n_buckets(blobs) or 1
+    blobs = blobs.drop("nb")
 
     if broadcast_blobs:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import BooleanType
 
-        blob_map = {
-            int(r["bucket"]): (r["blob"], int(r["m"]), int(r["k"]))
-            for r in bloom.collect()
-        }
+        blob_map = {int(r["bucket"]): r.asDict() for r in blobs.collect()}
         bmap = candidates.sparkSession.sparkContext.broadcast(blob_map)
 
         @pandas_udf(BooleanType())
@@ -259,23 +263,13 @@ def bloom_might_contain(
             import numpy as np
 
             out = np.zeros(len(fp), dtype=bool)
-            if len(fp):
-                fps = fp.to_numpy()
-                bks = bucket.to_numpy()
-                for b in np.unique(bks):
-                    entry = bmap.value.get(int(b))
-                    if entry is None:
-                        continue
-                    blob, m, k = entry
-                    bits = np.frombuffer(blob, dtype=np.uint64)
+            fps = fp.to_numpy()
+            bks = bucket.to_numpy()
+            for b in np.unique(bks):
+                row = bmap.value.get(int(b))
+                if row is not None:
                     mask = bks == b
-                    idx = _bloom_indices(fps[mask].astype("int64"), m, k)
-                    hit = np.ones(mask.sum(), dtype=bool)
-                    for i in range(k):
-                        word = (idx[i] // 64).astype(np.int64)
-                        bit = np.uint64(1) << (idx[i] % np.uint64(64))
-                        hit &= (bits[word] & bit) != 0
-                    out[mask] = hit
+                    out[mask] = contains(row, fps[mask])
             return pd.Series(out)
 
         return candidates.withColumn(
@@ -287,31 +281,42 @@ def bloom_might_contain(
     out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
     out_schema += ", might_contain boolean"
 
-    def _probe_group(cands: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
+    def _probe_group(cands: pd.DataFrame, group: pd.DataFrame) -> pd.DataFrame:
         cands = cands.drop(columns=["bucket"])
-        if len(blobs) == 0 or len(cands) == 0:
+        if len(group) == 0 or len(cands) == 0:
             cands["might_contain"] = False
-            return cands
-        bits = np.frombuffer(blobs["blob"].iloc[0], dtype=np.uint64)
-        m, k = int(blobs["m"].iloc[0]), int(blobs["k"].iloc[0])
-        fps = cands["url_fp"].to_numpy()
-        idx = _bloom_indices(fps.astype("int64"), m, k)
-        hit = np.ones(len(fps), dtype=bool)
-        for i in range(k):
-            word = (idx[i] // 64).astype(np.int64)
-            bit = np.uint64(1) << (idx[i] % np.uint64(64))
-            hit &= (bits[word] & bit) != 0
-        cands["might_contain"] = hit
+        else:
+            cands["might_contain"] = contains(group.iloc[0], cands["url_fp"].to_numpy())
         return cands
 
     bucketed = candidates.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
     return (
         bucketed.groupBy("bucket")
-        .cogroup(bloom.groupBy("bucket"))
+        .cogroup(blobs.groupBy("bucket"))
         .applyInPandas(_probe_group, schema=out_schema)
     )
+
+
+def _bloom_contains(row, fps):
+    import numpy as np
+
+    m, k = int(row["m"]), int(row["k"])
+    bits = np.frombuffer(row["blob"], dtype=np.uint64)
+    idx = _bloom_indices(fps.astype("int64"), m, k)
+    hit = np.ones(len(fps), dtype=bool)
+    for i in range(k):
+        word = (idx[i] // 64).astype(np.int64)
+        bit = np.uint64(1) << (idx[i] % np.uint64(64))
+        hit &= (bits[word] & bit) != 0
+    return hit
+
+
+def bloom_might_contain(
+    candidates: DataFrame, bloom: DataFrame, broadcast_blobs: bool = True
+) -> DataFrame:
+    """Probe the bloom: adds boolean ``might_contain`` (false => definitely
+    new) through the shared two-arm blob probe (:func:`_probe_blobs`)."""
+    return _probe_blobs(candidates, bloom, _bloom_contains, broadcast_blobs)
 
 
 def dedupe_new_urls(
@@ -394,63 +399,4 @@ def content_dedup(docs: DataFrame, hash_col: str = "content_hash", order_col: st
             F.when(F.col("_rn") == 1, F.lit(None).cast("string")).otherwise(F.col("_first")),
         )
         .drop("_rn", "_first")
-    )
-
-
-def canonical_groups(
-    pages: DataFrame,
-    links: DataFrame,
-    url_col: str = "url_norm",
-) -> DataFrame:
-    """rel=canonical collapse: group crawled pages by their declared
-    canonical target and pick one representative per group.
-
-    The reference extracts <link rel=canonical> into web_links with
-    link_type='canonical' (services/parser/app.py:147-162) and keeps those
-    links out of the frontier (app.py:629) — it stores the hint but never
-    acts on it. This operator is the acting half a dedup pipeline needs:
-    treat the hint one-hop (like search engines — canonical chains are not
-    followed), group each page under coalesce(declared target, itself),
-    and elect the target itself as representative when it was actually
-    crawled, else the lexicographically smallest member (deterministic).
-
-    links only needs (source_url, target_url, link_type); multiple
-    declarations per page keep the first by target order (htmllib keeps
-    the first rel=canonical seen, so upstream is already unique — the
-    dropDuplicates here is a safety net for hand-built inputs).
-
-    Shape at 100 TB: one equi join pages⋈declarations on url (both sides
-    crawl-partitioned), then two window functions over the SAME
-    canonical_url partitioning — a single hash exchange, no iteration (the
-    one-hop rule is what keeps this from being a graph problem).
-    """
-    from pyspark.sql import Window
-
-    decl = (
-        links.filter(F.col("link_type") == "canonical")
-        .select(
-            F.col("source_url").alias(url_col),
-            F.col("target_url").alias("canonical_url"),
-        )
-        .dropDuplicates([url_col])
-    )
-    m = pages.select(url_col).join(decl, url_col, "left").select(
-        url_col,
-        F.coalesce("canonical_url", F.col(url_col)).alias("canonical_url"),
-    )
-    w = Window.partitionBy("canonical_url")
-    target_crawled = (
-        F.max(
-            F.when(F.col(url_col) == F.col("canonical_url"), 1).otherwise(0)
-        ).over(w)
-        == 1
-    )
-    rep = F.when(target_crawled, F.col("canonical_url")).otherwise(
-        F.min(url_col).over(w)
-    )
-    return m.select(
-        url_col,
-        "canonical_url",
-        rep.alias("rep_url"),
-        (F.col(url_col) == rep).alias("is_rep"),
     )

@@ -4,8 +4,8 @@ Image/audio/video payloads ride as BINARY columns with a typed metadata
 struct; decode/feature steps are Arrow-batched ``mapInPandas`` stages.
 ``decode_stub=True`` (default) produces a deterministic fake feature vector
 derived from the payload bytes. ``decode_stub=False`` uses the real codec
-where one is import-gated in (PIL for images — decode, histogram features,
-pixel resample); audio/video decode (ffmpeg/librosa) and a missing PIL
+where one is import-gated in (PIL for images — decode, histogram
+features); audio/video decode (ffmpeg/librosa) and a missing PIL
 raise NotImplementedError where the library call belongs. The Spark-side
 plumbing — schema, batch iteration, partitioning, output shape — is real
 and tested either way.
@@ -141,30 +141,11 @@ def extract_media_features(
     return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: explode each video row into the frame
-    timestamps a decoder would extract (the decode itself is the stub above).
-    Native sequence+explode — demonstrates the one-row->many shape without
-    Python."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
-RESIZE_SCHEMA = (
-    "media_id long, kind string, width int, height int, "
-    "target_w int, target_h int, payload binary"
-)
-
-
 def resize_dims(width, height, max_w: int, max_h: int):
     """Aspect-preserving fit into ``max_w x max_h``, never upscaling:
     scale = min(max_w/w, max_h/h, 1), floor to pixels, floor of 1. Pure
-    Column arithmetic (the real part of a resize stage — the pixel
-    resample is the codec stub); returns (target_w, target_h)."""
+    Column arithmetic (the resize plan behind the ``media_resize_plan``
+    contract entry); returns (target_w, target_h)."""
     w = F.col(width) if isinstance(width, str) else width
     h = F.col(height) if isinstance(height, str) else height
     scale = F.least(
@@ -173,67 +154,6 @@ def resize_dims(width, height, max_w: int, max_h: int):
     tw = F.greatest(F.floor(w * scale), F.lit(1)).cast("int")
     th = F.greatest(F.floor(h * scale), F.lit(1)).cast("int")
     return tw, th
-
-
-def resize_media(
-    media: DataFrame, max_w: int, max_h: int, decode_stub: bool = True
-) -> DataFrame:
-    """mapInPandas resize stage: target dims via :func:`resize_dims`
-    (computed JVM-side before the Python crossing, so the batch carries
-    them). ``decode_stub=True``: payload passes through unchanged (dims
-    recorded only). ``decode_stub=False``: image payloads decode + resample
-    + re-encode PNG via import-gated PIL; video frames (ffmpeg) raise, and
-    a missing PIL raises where the call belongs. Partitioning preserved;
-    only image/video rows are resized, audio passes through with target
-    dims = source dims."""
-    tw, th = resize_dims("width", "height", max_w, max_h)
-    staged = media.select(
-        "media_id",
-        "kind",
-        "width",
-        "height",
-        F.when(F.col("kind").isin("image", "video"), tw)
-        .otherwise(F.col("width"))
-        .alias("target_w"),
-        F.when(F.col("kind").isin("image", "video"), th)
-        .otherwise(F.col("height"))
-        .alias("target_h"),
-        "payload",
-    )
-
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = None if decode_stub else _pil_image()
-        for pdf in batches:
-            if decode_stub:
-                yield pdf  # stub: dims recorded, payload passthrough
-                continue
-            if Image is None:
-                raise NotImplementedError(
-                    "real pixel resample requires PIL (images) / ffmpeg "
-                    "(video) — not in container"
-                )
-            if (pdf["kind"] == "video").any():
-                raise NotImplementedError(
-                    "real video frame resample requires ffmpeg — not in "
-                    "container (images resample via PIL)"
-                )
-
-            import io
-
-            def _fit(row):
-                if row["kind"] != "image":
-                    return row["payload"]  # audio passes through
-                img = Image.open(io.BytesIO(row["payload"]))
-                out = img.resize((int(row["target_w"]), int(row["target_h"])))
-                buf = io.BytesIO()
-                out.save(buf, format="PNG")
-                return buf.getvalue()
-
-            out = pdf.copy()
-            out["payload"] = pdf.apply(_fit, axis=1)
-            yield out
-
-    return staged.mapInPandas(_resample, schema=RESIZE_SCHEMA)
 
 
 def sniff_media_type(data: Column) -> Column:

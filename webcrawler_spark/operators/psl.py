@@ -71,42 +71,6 @@ def rules_dim(spark: SparkSession, rules: list[tuple[str, str]] | None = None) -
     return df.withColumn("k", F.size(F.split(F.col("rule"), "\\.")))
 
 
-def parse_psl_file(path: str) -> list[tuple[str, str]]:
-    """Parse an official ``public_suffix_list.dat`` (publicsuffix.org/list/)
-    into the (rule, kind) pairs ``rules_dim`` takes — deploying the full
-    ~9k-rule production list is one file drop, zero code changes.
-
-    Format, per the PSL spec: ``//`` lines are comments (including the
-    ICANN/PRIVATE section markers), blank lines are ignored, and each
-    rule is everything up to the first whitespace. ``!`` prefixes an
-    exception rule; a leading ``*.`` marks a wildcard rule (stored as its
-    base, matching PSL_SNAPSHOT's convention). The implicit default rule
-    ``*`` (public suffix = the last label when nothing matches) is already
-    built into ``registrable_domain``'s no-match fallback, so a literal
-    ``*`` line is skipped."""
-    rules: list[tuple[str, str]] = []
-    with open(path, encoding="utf-8") as f:
-        for raw in f:
-            line = raw.strip()
-            if not line or line.startswith("//"):
-                continue
-            rule = line.split()[0].lower()
-            if rule.startswith("!"):
-                rules.append((rule[1:], "exception"))
-            elif rule.startswith("*."):
-                rules.append((rule[2:], "wildcard"))
-            elif rule != "*":
-                rules.append((rule, "normal"))
-    return rules
-
-
-def rules_dim_from_file(spark: SparkSession, path: str) -> DataFrame:
-    """(rule, kind, k) broadcast dimension loaded from a
-    ``public_suffix_list.dat`` file — the deploy-time swap for the bundled
-    snapshot."""
-    return rules_dim(spark, parse_psl_file(path))
-
-
 def registrable_domain(
     hosts: DataFrame, dim: DataFrame, host_col: str = "host"
 ) -> DataFrame:

@@ -184,12 +184,11 @@ def exact_heavy_hitters(
     100 TB shape, stated honestly: in a one-shot batch the candidate pass
     (distinct keys probed against the sketch) costs the same exchange
     class as an exact groupBy — the two-pass shape pays off when pass 1's
-    sketch ALREADY EXISTS: the streaming flood counter
-    (`streaming.ingest.merged_cms`) accumulates it per micro-batch with
-    KBs of state, and this operator is then the cheap exact VERIFIER —
-    a broadcast semi-join of the corpus against the (heavy hitters +
-    collision flukes) candidate set, no full-corpus counter table ever
-    materialized in stream state."""
+    sketch ALREADY EXISTS (e.g. per-epoch ``build_cms`` tables of KBs each,
+    merged by summing ``cnt`` per (r, col)), and this operator is then the
+    cheap exact VERIFIER — a broadcast semi-join of the corpus against the
+    (heavy hitters + collision flukes) candidate set, no full-corpus
+    counter table ever materialized."""
     cms = build_cms(df, key_col, width=width)
     keys = df.select(key_col).distinct()
     cand = estimate_cms(cms, keys, key_col, width=width).filter(

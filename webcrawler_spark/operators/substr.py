@@ -20,10 +20,9 @@ token-n-gram fingerprinting:
   -> per-doc interval merge of [pos, pos+n)  # one window per doc
                                              # (gaps-and-islands cummax)
 
-Output is merged character-of-token spans per doc; `strip_spans` rebuilds
-the cleaned text. All JVM-native — windows come from `F.sequence` +
-`F.transform` (no Python), the gram hash is md5 of the joined window (md5
-so the DuckDB oracle computes the identical key).
+Output is merged token spans per doc. All JVM-native — windows come from
+`F.sequence` + `F.transform` (no Python), the gram hash is md5 of the
+joined window (md5 so the DuckDB oracle computes the identical key).
 """
 
 from __future__ import annotations
@@ -89,35 +88,3 @@ def duplicate_ngram_spans(
     return islands.groupBy("doc_id", "island").agg(
         F.min("pos").alias("span_start"), F.max("end").alias("span_end")
     ).select("doc_id", "span_start", "span_end")
-
-
-def strip_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Rebuild each doc's text with the duplicated token spans removed
-    (tokens outside every span, joined by single spaces; docs with no spans
-    pass through). One groupBy(doc) after a broadcast-free join — the span
-    table is doc-scale, joined on the doc id."""
-    agg_spans = spans.groupBy(F.col(id_col).alias("doc_id")).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("spans")
-    )
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    joined = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("toks")
-    ).join(agg_spans, "doc_id", "left")
-    kept = F.filter(
-        F.sequence(F.lit(0), F.size("toks") - 1),
-        lambda i: ~F.exists(
-            F.coalesce(F.col("spans"), F.array()),
-            lambda s: (i >= s["span_start"]) & (i < s["span_end"]),
-        ),
-    )
-    return joined.select(
-        "doc_id",
-        F.array_join(
-            F.transform(kept, lambda i: F.get("toks", i)), " "
-        ).alias("clean_text"),
-    )

@@ -3796,7 +3796,7 @@ def q_cuckoo_ttl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((member & F.col("might_contain")).cast("long")).alias("n_member_hits"),
     ).withColumn("stage", F.lit("built"))
     expired = seen.filter(F.col("url_fp") % 4 == 0)
-    ck2 = CK.delete_cuckoo(ck, expired, n_buckets=8, capacity=100_000).persist()
+    ck2 = CK.delete_cuckoo(ck, expired, n_buckets=8).persist()
     after = CK.cuckoo_might_contain(orders, ck2).agg(
         F.count(F.lit(1)).alias("n_probed"),
         F.sum(survivor.cast("long")).alias("n_members"),
@@ -4613,9 +4613,7 @@ WHERE surt LIKE 'com,example,host7%'
 # CDX index records (sources/cdx.cdx_records): the cc-index projection —
 # SURT key + 14-digit timestamp + SHA-256 digest + mime/status/length —
 # over the same synthetic URL table as surt_prefix_scan (priority+date+key
-# as the page body). The sorted-shard SINK (export_cdx + cluster.idx two-level
-# lookup) is exercised by tests/test_cdx.py; this entry pins the record
-# projection's values.
+# as the page body). This entry pins the record projection's values.
 
 
 def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:

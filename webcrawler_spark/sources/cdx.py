@@ -1,28 +1,17 @@
-"""CDXJ URL index — the crawl-archive lookup index (sink + records).
+"""CDXJ URL index records — the crawl-archive lookup index's row shape.
 
 Third leg of the Common-Crawl artifact trio next to ``sources/warc.py``'s
-WARC/WET source+sink: the cc-index / Internet Archive CDXJ layout (public
-formats: CDXJ lines ``<SURT key> <14-digit timestamp> <JSON>`` sorted
-lexicographically, sharded into files, with a ``cluster.idx`` mapping each
-shard's first key to its file so a lookup is two binary searches — one in
-the driver-sized cluster.idx, one inside a single shard). The reference
+WARC/WET source: the cc-index / Internet Archive CDXJ record
+(``<SURT key> <14-digit timestamp> <JSON>``, public format). The reference
 serves URL lookups from Elasticsearch (services/indexer/app.py mappings);
-at archive scale the published answer is this sorted static index instead
-of a live cluster.
-
-Scale shape: `export_cdx` is one distributed sort — ``repartitionByRange``
-on the SURT key (the standard sample-boundaries shuffle every Spark sort
-uses) + per-partition ordered write, executor-side file IO exactly like a
-file sink's tasks. The only driver-side data is one (first_key, path, rows)
-row per shard for cluster.idx. At 100 TB / 10^10 records this is the same
-job Common Crawl runs to build cc-index; nothing is collected.
+at archive scale the published answer is a sorted static index of these
+records instead of a live cluster. ``cdx_records`` is the projection the
+driver contract's ``cdx_index`` entry checks; sorting and sharding the
+records into files is a plain ``repartitionByRange`` + file write left to
+the caller.
 """
 
 from __future__ import annotations
-
-import json
-import os
-from bisect import bisect_right
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -61,114 +50,3 @@ def cdx_records(
         status.alias("status"),
         F.octet_length(F.col(content_col).cast("string")).alias("length"),
     )
-
-
-def _cdxj_line(row) -> str:
-    meta = {
-        "digest": row["digest"],
-        "length": row["length"],
-        "mime": row["mime"],
-        "status": row["status"],
-        "url": row["url"],
-    }
-    return f"{row['surt']} {row['ts']} " + json.dumps(
-        meta, sort_keys=True, separators=(",", ":")
-    )
-
-
-def export_cdx(records: DataFrame, out_dir: str, n_shards: int = 4) -> str:
-    """Write `records` (schema of :func:`cdx_records`) as a sorted, sharded
-    CDXJ index under `out_dir`: ``cdx-NNNNN.cdxj`` shard files, each
-    internally sorted by (surt, ts), shard N's keys all < shard N+1's
-    (range partitioning), plus ``cluster.idx`` — one
-    ``<first_key>\\t<shard file>\\t<rows>`` line per non-empty shard, in key
-    order. Returns the cluster.idx path.
-
-    Empty shards (range sampling can under-fill the last partitions) are
-    skipped; cluster.idx lists only written files.
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    # range-partition on surt ALONE (sort within still by (surt, ts)): equal
-    # keys land in one partition, so one URL's captures can never straddle a
-    # shard boundary — the surt-only binary search in cdx_lookup stays exact
-    sharded = (
-        records.repartitionByRange(n_shards, "surt")
-        .sortWithinPartitions("surt", "ts")
-        .withColumn("_pid", F.spark_partition_id())
-    )
-
-    def _write(it):
-        handles: dict[int, object] = {}
-        first: dict[int, str] = {}
-        counts: dict[int, int] = {}
-        try:
-            for row in it:
-                pid = row["_pid"]
-                if pid not in handles:
-                    handles[pid] = open(
-                        os.path.join(out_dir, f"cdx-{pid:05d}.cdxj"), "w"
-                    )
-                    first[pid] = f"{row['surt']} {row['ts']}"
-                    counts[pid] = 0
-                handles[pid].write(_cdxj_line(row) + "\n")
-                counts[pid] += 1
-        finally:
-            for f in handles.values():
-                f.close()
-        for pid in sorted(handles):
-            yield (first[pid], f"cdx-{pid:05d}.cdxj", counts[pid])
-
-    # one tiny row per shard comes back to the driver — that's cluster.idx
-    summary = sorted(sharded.rdd.mapPartitionsWithIndex(
-        lambda _, it: _write(it)
-    ).collect())
-    idx_path = os.path.join(out_dir, "cluster.idx")
-    with open(idx_path, "w") as f:
-        for first_key, fname, n in summary:
-            f.write(f"{first_key}\t{fname}\t{n}\n")
-    return idx_path
-
-
-def lookup_shard(cluster_idx_path: str, surt: str) -> str | None:
-    """Two-level lookup, step 1: the shard file whose key range contains
-    `surt` (binary search over cluster.idx first-keys — the driver-sized
-    half of a CDX query; step 2 is a binary search inside the one shard).
-    Returns None when `surt` sorts before the first shard's first key.
-    """
-    firsts: list[str] = []
-    files: list[str] = []
-    with open(cluster_idx_path) as f:
-        for line in f:
-            first_key, fname, _ = line.rstrip("\n").split("\t")
-            firsts.append(first_key.split(" ")[0])
-            files.append(fname)
-    i = bisect_right(firsts, surt) - 1
-    return files[i] if i >= 0 else None
-
-
-def cdx_lookup(out_dir: str, surt: str) -> list[dict]:
-    """Complete two-level CDX query: cluster.idx binary search to the one
-    shard, then binary search inside that shard's sorted lines — the
-    archive-lookup path (an ES get-by-url without a cluster). Returns the
-    parsed JSON payloads (ts added) of every record whose SURT key equals
-    `surt`, in timestamp order; [] when absent. Driver/client-side: reads
-    exactly one shard file.
-    """
-    idx_path = os.path.join(out_dir, "cluster.idx")
-    shard = lookup_shard(idx_path, surt)
-    if shard is None:
-        return []
-    with open(os.path.join(out_dir, shard)) as f:
-        lines = f.read().splitlines()
-    keys = [line.split(" ", 1)[0] for line in lines]
-    from bisect import bisect_left
-
-    i = bisect_left(keys, surt)
-    out = []
-    while i < len(lines) and keys[i] == surt:
-        key, ts, payload = lines[i].split(" ", 2)
-        rec = json.loads(payload)
-        rec["ts"] = ts
-        out.append(rec)
-        i += 1
-    return out

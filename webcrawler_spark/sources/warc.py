@@ -216,66 +216,3 @@ def pages_from_warc(spark: SparkSession, path: str) -> DataFrame:
         ).alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-
-
-def export_wet(
-    docs: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    text_col: str = "text",
-    date: str = "2026-01-01T00:00:00Z",
-    n_files: int = 4,
-    compress: bool = True,
-) -> list[str]:
-    """WET sink: shard `docs` into `n_files` Common-Crawl-style WET archives
-    under `out_dir` (part-00000.warc.gz …), one gzip member per record as
-    CC emits. Deterministic end-to-end: rows shard by pmod(xxhash64(url))
-    and sort by url within the shard, so re-running produces byte-identical
-    archives (record ids are md5-derived, no uuids/clocks).
-
-    100 TB shape: each task serializes ONE shard with streaming gzip —
-    executor-side file IO exactly like a Spark file sink's write tasks; no
-    driver collect, no shuffle beyond the one repartition to the target
-    file count. Round-trips through `read_warc`/`pages_from_warc` (tested).
-
-    Returns the written file paths (driver-side listing of out_dir)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
-    sharded = (
-        docs.select(F.col(url_col).alias("url"), F.col(text_col).alias("text"))
-        .withColumn("_shard", F.pmod(F.xxhash64("url"), F.lit(n_files)).cast("int"))
-        .repartition(n_files, "_shard")
-        .sortWithinPartitions("_shard", "url")
-    )
-
-    def _write(it):
-        import gzip as _gz
-
-        handles: dict[int, object] = {}
-        try:
-            for row in it:
-                sh = row["_shard"]
-                if sh not in handles:
-                    suffix = ".warc.gz" if compress else ".warc"
-                    f = open(os.path.join(out_dir, f"part-{sh:05d}{suffix}"), "wb")
-                    handles[sh] = f
-                rec = wet_record_bytes(row["url"], date, row["text"] or "")
-                if compress:
-                    # one gzip member per record (Common Crawl layout):
-                    # readers can resync per member. mtime=0 pins the gzip
-                    # header — default stamps wall-clock and breaks the
-                    # byte-identical re-run guarantee
-                    handles[sh].write(_gz.compress(rec, mtime=0))
-                else:
-                    handles[sh].write(rec)
-        finally:
-            for f in handles.values():
-                f.close()
-
-    sharded.foreachPartition(_write)
-    return sorted(
-        os.path.join(out_dir, p) for p in os.listdir(out_dir) if p.startswith("part-")
-    )

@@ -194,7 +194,9 @@ def test_update_with_mismatched_n_buckets_stays_correct(spark):
     """Regression: the bloom's incremental update and the cuckoo's TTL
     delete must bucket the delta with the EXISTING table's modulus, not the
     caller's — a mismatched n_buckets would scatter fps into blobs the probe
-    never consults."""
+    never consults. Likewise the bloom update keeps each blob's own m/k when
+    the caller's capacity/fp_rate differ (a resume with changed bloom
+    settings), instead of OR-ing blobs of two different sizes."""
     from webcrawler_spark.operators import dedup as D
 
     a, b = _fps(5_000, seed=20), _fps(5_000, seed=21)
@@ -204,5 +206,24 @@ def test_update_with_mismatched_n_buckets_stays_correct(spark):
     assert CK.cuckoo_might_contain(_seen_df(spark, a), ck2).filter(~F.col("might_contain")).count() == 0
 
     bl0 = D.build_bloom(_seen_df(spark, a), n_buckets=8, capacity=20_000, fp_rate=0.001)
-    bl1 = D.update_bloom(bl0, _seen_df(spark, b), n_buckets=3, capacity=20_000, fp_rate=0.001)
+    bl1 = D.update_bloom(bl0, _seen_df(spark, b), n_buckets=3, capacity=40_000, fp_rate=0.01)
     assert D.bloom_might_contain(both, bl1).filter(~F.col("might_contain")).count() == 0
+
+
+def test_bloom_update_equals_build_over_union(spark):
+    """update_bloom(build_bloom(A), B) is byte-equal, bucket by bucket, to
+    build_bloom(A ∪ B): OR-ing B's bits into A's blobs is the same fold the
+    build runs over both sets."""
+    from webcrawler_spark.operators import dedup as D
+
+    a, b = _fps(4_000, seed=22), _fps(3_000, seed=23)
+    cols = ["bucket", "blob", "m", "k", "nb"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    built = D.build_bloom(_seen_df(spark, a), n_buckets=8, capacity=20_000, fp_rate=0.001)
+    updated = D.update_bloom(built, _seen_df(spark, b), n_buckets=8, capacity=20_000, fp_rate=0.001)
+    union = D.build_bloom(_seen_df(spark, np.union1d(a, b)), n_buckets=8, capacity=20_000, fp_rate=0.001)
+    assert rows(updated) == rows(union)
+    assert len(rows(union)) == 8

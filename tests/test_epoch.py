@@ -476,16 +476,6 @@ def test_global_budget_host_rank_steering(spark):
     assert {r["host"] for r in kept.collect()} == {"bbb.com"}
     assert {r["host"] for r in bumped.collect()} == {"aaa.com"}
     assert {r["reason"] for r in bumped.collect()} == {"global_budget"}
-    # the OPIC ranker is a drop-in alternative: the better-linked host
-    # still wins the same capacity fight
-    cfg_o = CrawlConfig(
-        global_budget=2, host_rank_weight=100.0, host_rank_algo="opic"
-    )
-    kept_o, bumped_o = E.apply_global_budget(
-        sched, links, 1, cfg_o, cols + ["ready_epoch", "reason"]
-    )
-    assert {r["host"] for r in kept_o.collect()} == {"bbb.com"}
-    assert {r["host"] for r in bumped_o.collect()} == {"aaa.com"}
 
 
 def test_trap_defense_rejects_suspect_hosts(spark, pages_df, seeds_df, robots_df, tmp_path_factory):

@@ -12,6 +12,7 @@
 
 import io
 import re
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,7 +116,7 @@ def test_frontier_schedule_single_politeness_shuffle(spark, seeds_df, robots_df)
     from webcrawler_spark.operators import scheduler as S
 
     schedule, _, _ = S.schedule_epoch(
-        _seed_pending(seeds_df), robots_df, None, 0, CrawlConfig(), salt_factor=1
+        _seed_pending(seeds_df), robots_df, None, 0, replace(CrawlConfig(), hot_host_salt=1)
     )
     plan = plan_str(schedule, "simple")
     n_exchanges = plan.count("Exchange hashpartitioning")
@@ -132,7 +133,7 @@ def test_frontier_schedule_salted_two_phase_shuffles(spark, seeds_df, robots_df)
     from webcrawler_spark.operators import scheduler as S
 
     schedule, _, _ = S.schedule_epoch(
-        _seed_pending(seeds_df), robots_df, None, 0, CrawlConfig(), salt_factor=4
+        _seed_pending(seeds_df), robots_df, None, 0, replace(CrawlConfig(), hot_host_salt=4)
     )
     plan = plan_str(schedule, "simple")
     keys = {
@@ -225,6 +226,27 @@ def test_bloom_probe_cogroup_path_single_bucket_shuffle(spark, kind):
     # the live probe plan above it must hold exactly two bucket shuffles
     live = plan.split("InMemoryRelation")[0]
     assert live.count("Exchange hashpartitioning") == 2
+
+
+@pytest.mark.parametrize("kind", ["update_bloom", "delete_cuckoo"])
+def test_blob_maintenance_one_cogroup_per_table(spark, kind):
+    """Folding fps into an existing blob table is one cogroup of (blobs,
+    fps) by bucket: each blob crosses Arrow once. No join of the old table
+    to a second blob table and no scalar UDF merging blob pairs."""
+    from webcrawler_spark.operators import cuckoo as CK
+    from webcrawler_spark.operators import dedup as D
+
+    seen = spark.range(2000).select(F.col("id").alias("url_fp"))
+    delta = spark.range(2000, 2500).select(F.col("id").alias("url_fp"))
+    if kind == "update_bloom":
+        blobs = D.build_bloom(seen, n_buckets=8, capacity=4000, fp_rate=0.001)
+        out = D.update_bloom(blobs, delta, n_buckets=8, capacity=4000, fp_rate=0.001)
+    else:
+        blobs = CK.build_cuckoo(seen, n_buckets=8, capacity=4000)
+        out = CK.delete_cuckoo(blobs, delta, n_buckets=8)
+    plan = plan_str(out, mode="simple")
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "Join" not in plan, plan
 
 
 def test_corpus_ops_fully_native(spark):

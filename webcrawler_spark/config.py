@@ -2,13 +2,11 @@
 
 Defaults mirror the reference's constants:
 - default_crawl_delay = 1.0 s      (politeness_manager.py:30)
-- max_concurrent_per_domain = 2    (politeness_manager.py:31)
 - max_requests_per_minute = 60     (politeness_manager.py:43)
 - rate-limit defer delay = 10 s    (politeness_manager.py:72)
 - fuzzy threshold = 85             (deduplicator.py:33)
 - bloom: 10M capacity @ 0.1% FP    (deduplicator.py:42-43)
 - max scheduling attempts = 5      (url-scheduler/app.py:419-425)
-- delay bucket = 30 s              (url-scheduler/app.py:45-53)
 """
 
 from __future__ import annotations
@@ -22,9 +20,7 @@ class CrawlConfig:
     epoch_seconds: int = 60           # wall-clock each epoch "represents"
     default_crawl_delay: float = 1.0
     max_requests_per_minute: int = 60
-    max_concurrent_per_domain: int = 2
     max_attempts: int = 5
-    delay_bucket_seconds: int = 30
 
     # dedup
     fuzzy_threshold: int = 85
@@ -99,11 +95,6 @@ class CrawlConfig:
     use_host_rank: bool = False
     host_rank_weight: float = 100.0
     host_rank_iters: int = 3
-    # which structural score ranks hosts for the boost: "pagerank"
-    # (default, damped + dangling-redistributed) or "opic" (Abiteboul et
-    # al. 2003 cash/history — the score designed to be maintained online
-    # while crawling; same per-round join+agg cost, no damping parameter).
-    host_rank_algo: str = "pagerank"
 
     # strip tracking query params (columns.strip_tracking_params: utm_*,
     # fbclid, gclid, ...) from url_norm at ingest, re-fingerprinting — URLs
@@ -189,10 +180,6 @@ class CrawlConfig:
     mirror_min_shared: int = 2
     mirror_overlap: float = 0.5
     mirror_max_hosts_per_fp: int = 64
-
-    # parser gates (parser/app.py:453,515,534; url_normalizer.py:51)
-    min_content_length: int = 100
-    min_url_length: int = 10
 
     # frontier priority defaults
     discovered_priority: int = 5      # parser/app.py:636

@@ -21,18 +21,19 @@ each blob far under the 2 GB Arrow limit, probe-able either broadcast or as
 a shuffle join on the bucket key (the probe is the bloom's own two-arm
 ``dedup._probe_blobs`` with a cuckoo decoder).
 
-All per-blob work is numpy-vectorized inside Arrow-batched pandas UDFs
-(grouped-map / cogrouped-map); the only per-row Python is the cuckoo kick
-loop over the <1% of inserts both of whose buckets are already full.
+Build and delete are the bloom's own blob-maintenance shell
+(``dedup._fold_blobs``: a grouped-map build, a cogrouped-map delete) with a
+cuckoo per-bucket fold; the table's recorded ``nb`` and each blob's ``m``
+are authoritative, ``capacity`` sizes only a build. All per-blob work is
+numpy-vectorized; the only per-row Python is the cuckoo kick loop over the
+<1% of inserts both of whose buckets are already full.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .dedup import _probe_blobs, _table_n_buckets, bucket_of
+from .dedup import _fold_blobs, _probe_blobs
 
 _SLOTS = 4
 _LOAD_FACTOR = 0.84  # 4-slot tables fill reliably to ~95%; 0.84 leaves kick headroom
@@ -202,71 +203,46 @@ _CUCKOO_SCHEMA = "bucket int, blob binary, m int"
 
 def build_cuckoo(seen: DataFrame, n_buckets: int, capacity: int) -> DataFrame:
     """Build per-bucket cuckoo blobs from the seen set's fingerprints.
-    Returns DataFrame(bucket INT, blob BINARY, m INT) — same contract shape
-    as dedup.build_bloom minus k.
+    Returns DataFrame(bucket INT, blob BINARY, m INT, nb INT) — same contract
+    shape as dedup.build_bloom minus k.
 
     Each blob's table size is adaptive: at least the configured capacity
     share, grown (power of two, per-blob ``m`` rides the row) when the
     bucket's actual row count exceeds it — a build never fails on a
     hot-bucket overflow, it just allocates that blob bigger."""
-    m_default = _table_size(max(capacity // n_buckets, 1))
 
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(old, fps, nb: int) -> dict:
         import numpy as np
 
-        n = len(np.unique(pdf["url_fp"].to_numpy()))
-        m = max(m_default, _table_size(n))
+        m = max(_table_size(max(capacity // nb, 1)), _table_size(len(np.unique(fps))))
         table = _new_table(m)
-        _insert_fps(table, pdf["url_fp"].to_numpy())
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "blob": [table.tobytes()], "m": [m]}
-        )
+        _insert_fps(table, fps)
+        return {"blob": table.tobytes(), "m": m}
 
-    bucketed = seen.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
-    # nb makes the table self-describing: the probe must re-bucket with the
-    # build's modulus even when the data populates only a subset of buckets
-    # (max(bucket)+1 inference is wrong for e.g. all-even fps)
-    return (
-        bucketed.groupBy("bucket")
-        .applyInPandas(_build, schema=_CUCKOO_SCHEMA)
-        .withColumn("nb", F.lit(n_buckets))
-    )
+    return _fold_blobs(None, seen, n_buckets, _CUCKOO_SCHEMA, fold)
 
 
 def delete_cuckoo(cuckoo: DataFrame, expired_fps: DataFrame, n_buckets: int) -> DataFrame:
     """TTL eviction (indexer/app.py:213 30-day expiry): remove expired
     fingerprints in place — the operation a bloom cannot do.
 
-    Cogrouped-map over (existing blobs) x (expired fps) keyed by bucket:
-    each task sees one bucket's blob plus that bucket's expired rows and
-    rewrites only that blob. Untouched buckets pass through with an empty
-    delta side, so the cost is O(|expired| + touched blobs), never a
+    One cogroup of (existing blobs) x (expired fps) by bucket
+    (``dedup._fold_blobs``): each task rewrites only its bucket's blob, an
+    untouched blob passes through unchanged and an expired fp whose bucket
+    has no blob emits nothing. Cost is O(|expired| + blobs), never a
     rebuild. The table's own nb is authoritative over ``n_buckets``:
     bucketing the delta with a different modulus would miss the blobs that
     hold the fps."""
-    n_buckets = _table_n_buckets(cuckoo) or n_buckets
 
-    def _merge(blobs: pd.DataFrame, delta: pd.DataFrame) -> pd.DataFrame:
-        if not len(blobs):
-            return pd.DataFrame({"bucket": [], "blob": [], "m": []}).astype(
-                {"bucket": "int32", "m": "int32"}
-            )
-        m = int(blobs["m"].iloc[0])
-        table = _blob_to_table(blobs["blob"].iloc[0], m)
-        if len(delta):
-            _delete_fps(table, delta["url_fp"].to_numpy())
-        return pd.DataFrame(
-            {"bucket": [int(blobs["bucket"].iloc[0])], "blob": [table.tobytes()], "m": [m]}
-        )
+    def fold(old, fps, nb: int) -> dict | None:
+        if old is None:
+            return None
+        m = int(old["m"])
+        table = _blob_to_table(old["blob"], m)
+        _delete_fps(table, fps)
+        return {"blob": table.tobytes(), "m": m}
 
-    delta = expired_fps.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
-    return (
-        cuckoo.drop("nb")
-        .groupBy("bucket")
-        .cogroup(delta.groupBy("bucket"))
-        .applyInPandas(_merge, schema=_CUCKOO_SCHEMA)
-        .withColumn("nb", F.lit(n_buckets))
-    )
+    return _fold_blobs(cuckoo, expired_fps, n_buckets, _CUCKOO_SCHEMA, fold)
 
 
 def _cuckoo_contains(row, fps):

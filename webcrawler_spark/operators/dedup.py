@@ -7,7 +7,12 @@
   partitioned bloom is the cross-epoch persistent prefilter (the reference's
   Redis set, deduplicator.py:97-103). At 10^10 URLs the bloom table is ~17 GB
   of bits split across buckets (SURVEY §7 hard-part 3); each bucket blob stays
-  well under the 2 GB Arrow limit.
+  well under the 2 GB Arrow limit. Blob filters (this bloom and cuckoo.py)
+  share one maintenance shell, ``_fold_blobs`` (build: grouped-map;
+  update/delete: one cogroup of blobs and fps by bucket), and one probe,
+  ``_probe_blobs``; each filter supplies only its per-bucket fold and
+  decoder. A table's recorded nb, m and k are authoritative; sizing
+  arguments size only buckets with no blob yet.
 - fuzzy_dedupe: same-domain last-100 fuzzy match (deduplicator.py:123-186),
   off the hot path: the epoch loop never calls it, callers opt in by calling.
 - content_dedup: content-hash window dedup (indexer/app.py:216-253) — first
@@ -138,35 +143,80 @@ def _bloom_indices(fps, m: int, k: int):
     return idx
 
 
+def _fold_blobs(
+    blobs: DataFrame | None, fps: DataFrame, n_buckets: int, schema: str, fold
+) -> DataFrame:
+    """Shared build/update of a bucketed blob filter (bloom or cuckoo), each
+    blob crossing Arrow once. ``fold(old_row, fps, nb)`` returns a bucket's
+    new row (its non-bucket schema columns) or None for no row; ``old_row``
+    is the bucket's blob row (None when it has none), ``fps`` its int64
+    fingerprints (possibly empty), ``nb`` the bucket modulus.
+
+    With no table the fps group by bucket (grouped-map); with one, blobs and
+    fps cogroup by bucket. A table's recorded nb is authoritative over
+    ``n_buckets``: fps bucketed with another modulus would touch blobs the
+    probe never consults (false negatives). The stamped nb makes the table
+    self-describing even when the data fills only some buckets
+    (max(bucket)+1 inference is wrong for e.g. all-even fps)."""
+    if blobs is not None:
+        n_buckets = _table_n_buckets(blobs) or n_buckets
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def _emit(key, old: pd.DataFrame | None, delta: pd.DataFrame) -> pd.DataFrame:
+        row = fold(
+            old.iloc[0] if old is not None and len(old) else None,
+            delta["url_fp"].to_numpy(dtype="int64"),
+            n_buckets,
+        )
+        return pd.DataFrame([] if row is None else [{"bucket": int(key[0]), **row}], columns=names)
+
+    bucketed = fps.select("url_fp").withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
+    if blobs is None:
+        out = bucketed.groupBy("bucket").applyInPandas(
+            lambda key, delta: _emit(key, None, delta), schema=schema
+        )
+    else:
+        out = (
+            blobs.drop("nb")
+            .groupBy("bucket")
+            .cogroup(bucketed.groupBy("bucket"))
+            .applyInPandas(_emit, schema=schema)
+        )
+    return out.withColumn("nb", F.lit(n_buckets))
+
+
+_BLOOM_SCHEMA = "bucket int, blob binary, m int, k int"
+
+
+def _bloom_fold(capacity: int, fp_rate: float):
+    """Per-bucket bloom fold: OR the fps' bits into the bucket's blob. An
+    existing blob keeps its own m/k; ``capacity``/``fp_rate`` size only a
+    bucket with no blob yet."""
+
+    def fold(old, fps, nb: int) -> dict:
+        import numpy as np
+
+        if old is None:
+            m, k = _bloom_params(max(capacity // nb, 1), fp_rate)
+            bits = np.zeros(m // 64, dtype=np.uint64)
+        else:
+            m, k = int(old["m"]), int(old["k"])
+            bits = np.frombuffer(old["blob"], dtype=np.uint64).copy()
+        flat = _bloom_indices(fps, m, k).reshape(-1)
+        np.bitwise_or.at(bits, (flat // 64).astype(np.int64), np.uint64(1) << (flat % np.uint64(64)))
+        return {"blob": bits.tobytes(), "m": m, "k": k}
+
+    return fold
+
+
 def build_bloom(
     seen: DataFrame, n_buckets: int, capacity: int, fp_rate: float
 ) -> DataFrame:
     """Build per-bucket bloom blobs from the seen set's fingerprints.
 
-    Grouped-map pandas UDF: one blob per pmod(url_fp, n_buckets) bucket.
-    Returns DataFrame(bucket INT, blob BINARY, m INT, k INT)."""
-    m, k = _bloom_params(max(capacity // n_buckets, 1), fp_rate)
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        bits = np.zeros(m // 64, dtype=np.uint64)
-        idx = _bloom_indices(pdf["url_fp"].to_numpy(), m, k)
-        flat = idx.reshape(-1)
-        np.bitwise_or.at(bits, (flat // 64).astype(np.int64), np.uint64(1) << (flat % np.uint64(64)))
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "blob": [bits.tobytes()], "m": [m], "k": [k]}
-        )
-
-    bucketed = seen.withColumn("bucket", bucket_of(F.col("url_fp"), n_buckets))
-    # nb makes the table self-describing: the probe must re-bucket with the
-    # build's modulus even when the data populates only a subset of buckets
-    # (max(bucket)+1 inference is wrong for e.g. all-even fps)
-    return (
-        bucketed.groupBy("bucket")
-        .applyInPandas(_build, schema="bucket int, blob binary, m int, k int")
-        .withColumn("nb", F.lit(n_buckets))
-    )
+    Grouped-map pandas UDF: one blob per bucket_of(url_fp, n_buckets).
+    Returns DataFrame(bucket INT, blob BINARY, m INT, k INT, nb INT)."""
+    return _fold_blobs(None, seen, n_buckets, _BLOOM_SCHEMA, _bloom_fold(capacity, fp_rate))
 
 
 def update_bloom(
@@ -177,56 +227,16 @@ def update_bloom(
     fp_rate: float,
 ) -> DataFrame:
     """Incremental bloom maintenance: OR the delta's bits into the existing
-    per-bucket blobs (the seen set only grows — deduplicator.py:230-242).
+    per-bucket blobs (the seen set only grows — deduplicator.py:230-242) in
+    one cogroup of (blobs, delta fps) by bucket.
 
-    Epoch cost is O(|delta| + touched buckets), never a rebuild of the full
-    10^10-fp set. Buckets present on only one side pass through unchanged."""
-    if bloom is not None:
-        # the existing table's bucket modulus (and thus m/k) is
-        # authoritative: a delta bucketed with a different n_buckets would
-        # OR bits into blobs the probe never consults (false negatives)
-        existing_nb = _table_n_buckets(bloom)
-        if existing_nb:
-            n_buckets = existing_nb
-    delta = build_bloom(new_fps, n_buckets, capacity, fp_rate)
-    if bloom is None:
-        return delta
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    @pandas_udf(BinaryType())
-    def _or_blobs(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for x, y in zip(a, b):
-            if x is None:
-                out.append(y)
-            elif y is None:
-                out.append(x)
-            else:
-                out.append(
-                    (np.frombuffer(x, dtype=np.uint64) | np.frombuffer(y, dtype=np.uint64)).tobytes()
-                )
-        return pd.Series(out)
-
-    old = bloom.select(
-        "bucket", F.col("blob").alias("_old"), F.col("m").alias("_m0"), F.col("k").alias("_k0")
-    )
-    new = delta.select(
-        "bucket", F.col("blob").alias("_new"), F.col("m").alias("_m1"), F.col("k").alias("_k1")
-    )
-    return (
-        old.join(new, "bucket", "full")
-        .select(
-            "bucket",
-            _or_blobs(F.col("_old"), F.col("_new")).alias("blob"),
-            F.coalesce("_m0", "_m1").alias("m"),
-            F.coalesce("_k0", "_k1").alias("k"),
-        )
-        .withColumn("nb", F.lit(n_buckets))
-    )
+    Epoch cost is O(|delta| + blobs), never a rebuild of the full
+    10^10-fp set, and each blob crosses Arrow once. The table's recorded
+    nb, m and k are authoritative; ``n_buckets``, ``capacity`` and
+    ``fp_rate`` size only buckets with no blob yet (and the whole table
+    when ``bloom`` is None), so a resume with changed sizing settings keeps
+    probing the blobs it already has."""
+    return _fold_blobs(bloom, new_fps, n_buckets, _BLOOM_SCHEMA, _bloom_fold(capacity, fp_rate))
 
 
 def _probe_blobs(

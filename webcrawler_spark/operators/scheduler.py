@@ -20,7 +20,7 @@ oracle checks.
 Scale: exactly one shuffle (hash by host) for the politeness+priority stage.
 Hot-host skew is handled with two-phase top-k — rank within (host, salt)
 first, keep <= budget per salt, then the final per-host window runs over at
-most salt_factor x budget rows per host (bounded sort), mirroring the
+most hot_host_salt x budget rows per host (bounded sort), mirroring the
 reference's shard-rebalancing intent (domain_sharding.py:213-276) without a
 coordinator.
 """
@@ -46,7 +46,6 @@ def schedule_epoch(
     host_stats: DataFrame | None,
     epoch: int,
     cfg: CrawlConfig = DEFAULT_CONFIG,
-    salt_factor: int | None = None,
     materialize=None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (schedule, deferred_next, rejected).
@@ -129,7 +128,7 @@ def schedule_epoch(
         )
 
     # ---- W1: per-host top-k under total ordering, optionally salted (skew)
-    salt = salt_factor if salt_factor is not None else cfg.hot_host_salt
+    salt = cfg.hot_host_salt
     pre_overflow = None
     if salt and salt > 1:
         pre_w = Window.partitionBy(pol_key, "salt").orderBy(*_ORDER())

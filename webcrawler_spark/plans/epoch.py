@@ -154,17 +154,7 @@ def apply_global_budget(
             C.surt_host(F.col("source_url")).alias("src_host"),
             C.surt_host(F.col("target_url")).alias("dst_host"),
         )
-        if cfg.host_rank_algo == "opic":
-            # OPIC over the self-loop-free host graph: same normalization
-            # downstream, so the two algos are drop-in alternatives
-            hr = G.opic(
-                host_edges.filter(F.col("src_host") != F.col("dst_host"))
-                .withColumnRenamed("src_host", "src")
-                .withColumnRenamed("dst_host", "dst"),
-                n_iter=cfg.host_rank_iters,
-            ).select(F.col("node").alias("host"), F.col("opic").alias("rank"))
-        else:
-            hr = G.host_rank(host_edges, n_iter=cfg.host_rank_iters)
+        hr = G.host_rank(host_edges, n_iter=cfg.host_rank_iters)
         mx = hr.agg(F.max("rank").alias("_mx"))
         boost = hr.crossJoin(F.broadcast(mx)).select(
             F.col("host").alias("_rh"),

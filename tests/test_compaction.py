@@ -1,15 +1,14 @@
-"""Catalog maintenance (storage/catalog.py): delta compaction + expiry —
-the Iceberg rewrite_data_files / expire_snapshots analogs that keep a
-thousands-of-epochs seen set from becoming a small-files problem.
+"""Catalog maintenance (storage/catalog.py): delta compaction — the Iceberg
+rewrite_data_files analog that keeps a thousands-of-epochs seen set from
+becoming a small-files problem — and rollback.
 
 Invariants:
 - read_delta_union is value-identical before and after compaction (epoch
-  lineage column included);
+  lineage column included), also when time-travelling below the
+  compaction point;
 - the crawl continues correctly on a compacted catalog (new epochs stack
   on the compacted base) with crawl-order parity preserved;
-- expiry below the compaction point keeps current-state reads intact and
-  refuses time travel below the boundary;
-- expiry without a covering compaction is refused.
+- rollback_to truncates the manifest and reclaims what it orphans.
 """
 
 import json
@@ -34,23 +33,27 @@ def _seen_rows(cat, epoch):
 
 @pytest.fixture(scope="module")
 def compact_cat(spark, pages_df, seeds_df, robots_df, tmp_path_factory):
-    """2 epochs -> compact 'seen' -> 2 more epochs on the compacted base."""
+    """2 epochs -> compact 'seen' -> 2 more epochs on the compacted base;
+    also returns the pre-compaction seen rows as of epochs 0 and 1."""
     root = tmp_path_factory.mktemp("crawl_compact")
     cat = Catalog(spark, str(root))
     E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, CFG)
-    before = _seen_rows(cat, 1)
+    before = {e: _seen_rows(cat, e) for e in (0, 1)}
     n = cat.compact_delta("seen", 1)
-    assert n == len(before)
+    assert n == len(before[1])
     E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, CFG)  # resumes at 2
     return cat, before
 
 
 def test_compaction_value_identity(compact_cat):
     cat, before = compact_cat
-    assert _seen_rows(cat, 1) == before  # as-of the compaction point
+    assert _seen_rows(cat, 1) == before[1]  # as-of the compaction point
+    # below the compaction point the read filters the base on its lineage
+    # column
+    assert _seen_rows(cat, 0) == before[0]
     # post-compaction epochs stack on the base
     all_rows = _seen_rows(cat, 3)
-    assert set(before) <= set(all_rows)
+    assert set(before[1]) <= set(all_rows)
     assert {e for _, e in all_rows} == {0, 1, 2, 3}
 
 
@@ -73,59 +76,23 @@ def test_frontier_merge_compaction_identity(spark, pages_df, seeds_df, robots_df
     root = tmp_path_factory.mktemp("crawl_frontier_compact")
     cat = Catalog(spark, str(root))
     E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, CFG)
-    before = sorted(
-        (r["url_norm"], r["status"], r["status_epoch"])
-        for r in cat.read_merged("frontier", 1).collect()
-    )
+
+    def merged(epoch):
+        return sorted(
+            (r["url_norm"], r["status"], r["status_epoch"])
+            for r in cat.read_merged("frontier", epoch).collect()
+        )
+
+    before0, before = merged(0), merged(1)
     n = cat.compact_delta("frontier", 1)
     assert n == len(before)  # base holds exactly the resolved rows
-    assert before == sorted(
-        (r["url_norm"], r["status"], r["status_epoch"])
-        for r in cat.read_merged("frontier", 1).collect()
-    )
+    assert merged(1) == before
+    # below the compaction point the resolved base lacks superseded rows, so
+    # the read resolves the raw per-epoch dirs instead
+    assert merged(0) == before0
     E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, CFG)
-    merged = cat.read_merged("frontier", 3)
-    fps = [r["url_fp"] for r in merged.collect()]
+    fps = [r["url_fp"] for r in cat.read_merged("frontier", 3).collect()]
     assert len(fps) == len(set(fps))  # still one row per key after stacking
-    # expiry below the compaction point: current state intact, time travel
-    # below the boundary (raw dirs gone) refuses
-    state = sorted((r["url_norm"], r["status"]) for r in merged.collect())
-    cat.expire_deltas_before("frontier", 1)
-    assert state == sorted(
-        (r["url_norm"], r["status"]) for r in cat.read_merged("frontier", 3).collect()
-    )
-    with pytest.raises(ValueError, match="expired"):
-        cat.read_merged("frontier", 0)
-
-
-def test_expiry_semantics(compact_cat):
-    cat, _ = compact_cat
-    state_before = _seen_rows(cat, 3)
-    epoch0_rows = _seen_rows(cat, 0)
-    removed = cat.expire_deltas_before("seen", 1)
-    assert removed == 2  # epoch=0 and epoch=1 dirs
-    # current state unchanged (served from compact base + live deltas)
-    assert _seen_rows(cat, 3) == state_before
-    assert _seen_rows(cat, 1) is not None  # exactly the compaction point: OK
-    # time travel BELOW the boundary still works: the base keeps each row's
-    # lineage epoch, so the read filters the compacted base
-    assert _seen_rows(cat, 0) == epoch0_rows
-    # ...but a new compaction below the boundary (built from the raw
-    # partitions) refuses
-    with pytest.raises(ValueError, match="expired"):
-        cat.compact_delta("seen", 0)
-
-
-def test_expire_without_compaction_refused(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("noncompact")
-    cat = Catalog(spark, str(root))
-    df = spark.createDataFrame([(1, 0)], "x int, epoch int")
-    c = cat.stage("links", 0, df)
-    cat.commit_epoch(0, {"links": c}, {})
-    with pytest.raises(ValueError, match="not covered"):
-        cat.expire_deltas_before("links", 0)
-    with pytest.raises(ValueError, match="not a delta table"):
-        cat.compact_delta("host_stats", 0)
 
 
 def test_auto_compaction_in_epoch_loop(spark, pages_df, seeds_df, robots_df, tmp_path_factory, web):
@@ -145,49 +112,9 @@ def test_auto_compaction_in_epoch_loop(spark, pages_df, seeds_df, robots_df, tmp
     assert comp["seen"]["as_of"] == 3 and comp["links"]["as_of"] == 3
 
 
-def test_incremental_read_delta_and_merge(spark, tmp_path_factory):
-    """read_incremental returns exactly the rows committed in (from, to]:
-    raw appends for delta tables, net-change-per-key for merge tables; None
-    outside the range; refuses an expired range."""
-    root = tmp_path_factory.mktemp("incr")
-    cat = Catalog(spark, str(root))
-    for e in range(4):
-        seen = spark.createDataFrame([(e * 10, e), (e * 10 + 1, e)], "x int, epoch int")
-        # frontier touches key 7 every epoch (status flips) + one new key
-        fr = spark.createDataFrame(
-            [(7, f"s{e}", e), (100 + e, "pending", e)],
-            "url_fp long, status string, status_epoch int",
-        )
-        cat.commit_epoch(
-            e,
-            {"seen": cat.stage("seen", e, seen),
-             "frontier": cat.stage("frontier", e, fr)},
-            {},
-        )
-    inc = cat.read_incremental("seen", 0, 2)  # epochs 1 and 2 only
-    assert sorted(r["x"] for r in inc.collect()) == [10, 11, 20, 21]
-    assert cat.read_incremental("seen", 3, 9) is None
-    # merge table: net change per key across (0, 2] — key 7 resolves to its
-    # LATEST touch in the range (epoch 2), not one row per touch
-    chg = {r["url_fp"]: r for r in cat.read_incremental("frontier", 0, 2).collect()}
-    assert set(chg) == {7, 101, 102}
-    assert chg[7]["status"] == "s2" and chg[7]["status_epoch"] == 2
-    # expired range refuses
-    cat.compact_delta("seen", 1)
-    cat.expire_deltas_before("seen", 1)
-    with pytest.raises(ValueError, match="expired"):
-        cat.read_incremental("seen", 0, 2)
-    # a range fully above the expiry boundary still works
-    assert sorted(r["x"] for r in cat.read_incremental("seen", 1, 3).collect()) == [
-        20, 21, 30, 31,
-    ]
-
-
 def test_rollback_to(spark, tmp_path_factory):
     """rollback_to truncates the manifest atomically, reclaims orphaned
-    epoch dirs and stale compactions, and the next commit resumes cleanly;
-    refused when a compaction above the target is the only copy of expired
-    deltas."""
+    epoch dirs and stale compactions, and the next commit resumes cleanly."""
     import os
 
     root = tmp_path_factory.mktemp("rollback")
@@ -205,16 +132,19 @@ def test_rollback_to(spark, tmp_path_factory):
     df = spark.createDataFrame([(99, 2)], "x int, epoch int")
     cat.commit_epoch(2, {"seen": cat.stage("seen", 2, df)}, {})
     assert sorted(r["x"] for r in cat.read_delta_union("seen", 9).collect()) == [0, 10, 99]
-    # refusal: expired deltas live only in a compaction above the target
-    root2 = tmp_path_factory.mktemp("rollback_refuse")
-    cat2 = Catalog(spark, str(root2))
-    for e in range(3):
-        df = spark.createDataFrame([(e, e)], "x int, epoch int")
-        cat2.commit_epoch(e, {"seen": cat2.stage("seen", e, df)}, {})
-    cat2.compact_delta("seen", 2)
-    cat2.expire_deltas_before("seen", 2)
-    with pytest.raises(ValueError, match="roll back"):
-        cat2.rollback_to(1)
+
+
+def test_manifest_with_expired_deltas_refused(spark, tmp_path):
+    """A manifest recording expired deltas (a layout whose time travel the
+    catalog cannot serve) is refused on read, not misread."""
+    root = tmp_path / "expired"
+    root.mkdir()
+    manifest = {"epochs": [{"epoch": 0, "tables": {"seen": 1}, "counters": {}}],
+                "compactions": {"seen": {"as_of": 0}}, "expired": {"seen": 0}}
+    (root / "manifest.json").write_text(json.dumps(manifest))
+    cat = Catalog(spark, str(root))
+    with pytest.raises(ValueError, match="expired deltas"):
+        cat.last_committed_epoch()
 
 
 def test_recompaction_reclaims_old_base(spark, tmp_path_factory):
@@ -231,58 +161,8 @@ def test_recompaction_reclaims_old_base(spark, tmp_path_factory):
     assert os.path.exists(root / "seen" / "compact=2")
     assert not os.path.exists(root / "seen" / "compact=0")  # superseded base reclaimed
     assert sorted(r["x"] for r in cat.read_delta_union("seen", 2).collect()) == [0, 10, 20]
-
-
-def test_snapshot_diff_changelog(spark, pages_df, seeds_df, robots_df, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "diffcat"))
-    E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 3, CFG)
-
-    d = cat.snapshot_diff("frontier", 1, 2)
-    rows = d.collect()
-    kinds = {r["change_type"] for r in rows}
-    # epoch 2 both resolves earlier deferred keys (update) and discovers
-    # new ones (insert)
-    assert kinds == {"insert", "update"}
-    for r in rows:
-        if r["change_type"] == "insert":
-            assert r["before"] is None
-        else:
-            # the payload moved — seq-only touches are filtered out
-            assert (r["before"]["status"], r["before"]["priority"],
-                    r["before"]["depth"]) !=                    (r["after"]["status"], r["after"]["priority"],
-                    r["after"]["depth"])
-    # every changed key's after-state matches the resolved to_epoch state
-    resolved = {r["url_fp"]: r for r in cat.read_merged("frontier", 2).collect()}
-    for r in rows:
-        assert r["after"]["status"] == resolved[r["url_fp"]]["status"]
-    # touched-but-payload-identical keys are omitted (net changelog): the
-    # changed set is strictly smaller than the touched set
-    touched = cat.read_incremental("frontier", 1, 2).count()
-    assert len(rows) < touched
-    # append-only tables have no merge changelog — their changelog IS
-    # read_incremental
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        cat.snapshot_diff("seen", 1, 2)
-    # empty range -> None
-    assert cat.snapshot_diff("frontier", 2, 2) is None
-
-
-def test_file_stats_tracks_compaction(compact_cat, spark):
-    cat, _before = compact_cat
-    stats = {(r["kind"], r["epoch"]): (r["n_files"], r["total_bytes"])
-             for r in cat.file_stats("seen").collect()}
-    # compacted base for epochs <= 1 plus the two post-compaction deltas
-    assert ("base", 1) in stats
-    assert any(k == "delta" and e >= 2 for k, e in stats)
-    assert all(n >= 1 and b > 0 for n, b in stats.values())
-    # the base absorbed epochs 0-1: no delta rows remain at or below it
-    # unless their dirs still exist pre-expiry (they may); after expiry
-    # they must be gone
-    cat.expire_deltas_before("seen", 1)
-    after = {(r["kind"], r["epoch"]) for r in cat.file_stats("seen").collect()}
-    assert not any(k == "delta" and e <= 1 for k, e in after)
+    with pytest.raises(ValueError, match="not a delta table"):
+        cat.compact_delta("host_stats", 0)
 
 
 def test_postings_compaction_identity(spark, pages_df, seeds_df, robots_df, tmp_path_factory):
@@ -336,8 +216,6 @@ def test_catalog_reads_submit_no_job(spark, compact_cat):
         cat.read_delta_union("seen", 1),
         cat.read_snapshot("deferred", last),
         cat.read_merged("frontier", last),
-        cat.read_incremental("frontier", 1, last),
-        cat.read_delta_pruned("frontier", last, "url_fp", 0, 2**62),
     ]
     assert _jobs_submitted(spark) == j0
     assert all(r is not None for r in reads)

@@ -33,7 +33,6 @@ class CrawlConfig:
                                       # per-epoch read from unioning one dir per prior epoch
 
     # scale knobs
-    shuffle_partitions: int = 32
     n_shards: int = 4                 # docker-compose has 4 fetcher shards
     hot_host_salt: int = 8            # (host, salt) sub-partitions of the two-phase top-k window;
                                       # <= 1 runs the single per-host window

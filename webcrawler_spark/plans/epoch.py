@@ -851,18 +851,11 @@ def run_epoch(
     # segment twice and no cache-priming probe job is needed.
     from concurrent.futures import ThreadPoolExecutor
 
-    # manifest column stats (Iceberg manifest min/max) for the tables whose
-    # key range bounds later pruned reads; they ride each write's existing
-    # Observation, so this costs no extra job
-    stats_for = {"frontier": ("url_fp",), "seen": ("url_fp",)}
     write_secs: dict[str, float] = {}
 
     def _timed_stage(t: str, df: DataFrame) -> int:
         t0 = time.perf_counter()
-        n = cat.stage(
-            t, epoch, df, sort_within.get(t),
-            tuple(c for c in stats_for.get(t, ()) if c in df.columns),
-        )
+        n = cat.stage(t, epoch, df, sort_within.get(t))
         write_secs[t] = time.perf_counter() - t0
         return n
 
@@ -940,13 +933,12 @@ def run_epochs(
     robots: DataFrame | None,
     n_epochs: int,
     cfg: CrawlConfig = DEFAULT_CONFIG,
-    start_epoch: int | None = None,
     verify_extraction: bool = False,
     sitemap_hints: DataFrame | None = None,
     pages_prepared: DataFrame | None = None,
 ) -> list[dict]:
-    """Run epochs [start..start+n). ``start_epoch=None`` resumes after the
-    last committed epoch (S14: the manifest IS the offset).
+    """Run ``n_epochs`` epochs, resuming after the last committed epoch
+    (S14: the manifest IS the offset).
 
     ``pages_prepared``: optional pre-canonicalized page table (the
     `prepare_pages` output, already persisted+materialized by the caller) —
@@ -968,7 +960,7 @@ def run_epochs(
         # re-canonicalize every epoch
         pages_prepared.count()
     last = cat.last_committed_epoch()
-    start = start_epoch if start_epoch is not None else (0 if last is None else last + 1)
+    start = 0 if last is None else last + 1
     out = []
     dust_rules = None
     dust_ids: set = set()

@@ -966,7 +966,7 @@ quality AS (
     FROM documents
   )
 ),
-flags AS (
+flags AS MATERIALIZED (
   SELECT q.doc_id, q.wc, q.g1, e.g2,
          (c.doc_id IS NULL OR c.cluster_id = q.doc_id) AS g3
   FROM quality q

@@ -18,14 +18,14 @@ same *semantics* on plain Parquet with an atomic JSON manifest:
   opened and no Spark job runs until the caller's own action, as Iceberg
   plans from its table metadata. A table staged only by a manifest that
   predates ``schemas`` keeps footer inference until its next commit;
-- ``load_state(epoch)`` reconstructs exactly the state as of that epoch, so
-  resume-from-checkpoint is a manifest read.
+- every read takes an ``as_of_epoch`` and returns exactly the state as of
+  that epoch, so resume-from-checkpoint is a manifest read.
 
 On a real cluster the same call sites map 1:1 onto Iceberg:
 snapshot tables -> ``writeTo(t).overwritePartitions()``, delta tables ->
-``writeTo(t).append()``, manifest -> Iceberg snapshot metadata, and
-``load_state`` -> time travel (``VERSION AS OF``). The engine only talks to
-this interface, so swapping backends is a one-file change.
+``writeTo(t).append()``, manifest -> Iceberg snapshot metadata, and the
+``as_of_epoch`` reads -> time travel (``VERSION AS OF``). The engine only
+talks to this interface, so swapping backends is a one-file change.
 """
 
 from __future__ import annotations
@@ -68,9 +68,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # column min/max gathered by stage(stats_cols=...), keyed
-        # (table, epoch); commit_epoch folds them into the manifest entry
-        self._staged_stats: dict[tuple[str, int], dict] = {}
         # StructType JSON of each staged frame, keyed (table, epoch);
         # commit_epoch records them under the manifest's ``schemas``
         self._staged_schemas: dict[tuple[str, int], dict] = {}
@@ -81,11 +78,19 @@ class Catalog:
         return os.path.join(self.root, MANIFEST)
 
     def read_manifest(self) -> dict:
+        """The committed manifest; refuses one that records expired deltas
+        (a layout whose time travel this catalog cannot serve)."""
         path = self._manifest_path()
         if not os.path.exists(path):
             return {"epochs": []}
         with open(path) as f:
-            return json.load(f)
+            manifest = json.load(f)
+        if "expired" in manifest:
+            raise ValueError(
+                f"{path} records expired deltas of {sorted(manifest['expired'])}; "
+                "this catalog does not read an expired layout"
+            )
+        return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest")
@@ -107,7 +112,6 @@ class Catalog:
         epoch: int,
         df: DataFrame,
         sort_within_by: str | None = None,
-        stats_cols: tuple[str, ...] = (),
     ) -> int:
         """Write one table's epoch partition; returns row count (lineage).
 
@@ -115,13 +119,6 @@ class Catalog:
         column before the write — the parquet emulation of an Iceberg SORT
         ORDER (per-file clustering + min/max stats pruning), a per-partition
         sort with no extra shuffle.
-
-        ``stats_cols`` records manifest-level min/max for those columns
-        (Iceberg's manifest column stats): the aggregates ride the same
-        write-job Observation as the row count (no extra job), and
-        ``read_delta_pruned`` uses them to skip whole epoch partitions
-        whose range cannot match a predicate. Numeric/string columns only
-        (values must round-trip through the JSON manifest).
 
         The frame's schema is kept for ``commit_epoch`` to record in the
         manifest, so later reads of the table need no footer inference.
@@ -134,21 +131,11 @@ class Catalog:
             shutil.rmtree(path)  # idempotent re-run of an uncommitted epoch
         if sort_within_by:
             df = df.sortWithinPartitions(sort_within_by)
-        # count (and column stats) ride the write job itself (Observation)
-        # — no second job
+        # the count rides the write job itself (Observation) — no second job
         obs = Observation()
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for c in stats_cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
-        df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
-        got = obs.get
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
         self._staged_schemas[(table, epoch)] = df.schema.jsonValue()
-        if stats_cols:
-            self._staged_stats[(table, epoch)] = {
-                c: [got[f"min__{c}"], got[f"max__{c}"]] for c in stats_cols
-            }
-        return int(got["n"])
+        return int(obs.get["n"])
 
     def commit_epoch(self, epoch: int, table_counts: dict[str, int], counters: dict) -> None:
         """Atomic commit: epoch becomes visible only after manifest replace.
@@ -156,9 +143,6 @@ class Catalog:
         manifest = self.read_manifest()
         manifest["epochs"] = [e for e in manifest["epochs"] if e["epoch"] < epoch]
         entry = {"epoch": epoch, "tables": table_counts, "counters": counters}
-        stats = _pop_epoch(self._staged_stats, epoch)
-        if stats:
-            entry["stats"] = stats
         manifest["epochs"].append(entry)
         schemas = _pop_epoch(self._staged_schemas, epoch)
         manifest.setdefault("schemas", {}).update(
@@ -196,65 +180,23 @@ class Catalog:
             # compacted base + deltas after the compaction point: one dir
             # instead of one per epoch. Because every base row keeps its
             # lineage epoch column, time travel BELOW the compaction point
-            # is a filter on the base — it keeps working even after the
-            # original per-epoch dirs are expired.
+            # is a filter on the base.
             #
             # Merge tables are the exception: their compacted base keeps only
             # the latest row per key (superseded statuses are gone), so time
-            # travel below the compaction point must read the raw per-epoch
-            # dirs — available until expired, exactly Iceberg's snapshot-
-            # expiry boundary.
+            # travel below the compaction point reads the raw per-epoch dirs,
+            # which compaction keeps.
             from pyspark.sql import functions as F
 
             if table in MERGE_TABLES and comp["as_of"] > as_of_epoch:
-                return self._read(
-                    manifest, table, self._raw_paths(manifest, table, as_of_epoch)
-                )
+                return self._read(manifest, table, self._raw_paths(table, committed))
             paths = [self._compact_dir(table, comp["as_of"])]
             paths += [self._epoch_dir(table, e) for e in committed if e > comp["as_of"]]
             df = self._read(manifest, table, paths)
             if comp["as_of"] > as_of_epoch:
                 df = df.filter(F.col(_EPOCH_COL[table]) <= as_of_epoch)
             return df
-        return self._read(manifest, table, self._raw_paths(manifest, table, as_of_epoch))
-
-    def read_delta_pruned(
-        self, table: str, as_of_epoch: int, col: str, lo, hi
-    ) -> DataFrame | None:
-        """Delta-union read with manifest-stats partition pruning: epoch
-        partitions whose recorded [min, max] of ``col`` cannot intersect
-        [lo, hi] are never opened (Iceberg manifest-level file skipping —
-        at 10^10 rows over hundreds of epochs, a host-range or recrawl
-        query touches only the epochs that wrote that range). Epochs with
-        no recorded stats are read (pruning must never drop data). Falls
-        back to filter-only on a compacted table (the compacted base spans
-        all epochs, so per-epoch stats no longer bound it). The predicate
-        filter is ALWAYS applied on top — pruning is an I/O optimization,
-        never a semantic one."""
-        from pyspark.sql import functions as F
-
-        pred = F.col(col).between(lo, hi)
-        manifest = self.read_manifest()
-        if manifest.get("compactions", {}).get(table) or manifest.get(
-            "expired", {}
-        ).get(table):
-            df = self._union(manifest, table, as_of_epoch)
-            return None if df is None else df.filter(pred)
-        stats = {
-            e["epoch"]: e.get("stats", {}).get(table, {}).get(col)
-            for e in manifest["epochs"]
-        }
-        keep = []
-        for epoch in _committed(manifest, table, as_of_epoch):
-            s = stats.get(epoch)
-            if s is None or s[0] is None or s[1] is None or (
-                not (s[1] < lo or s[0] > hi)
-            ):
-                keep.append(epoch)
-        if not keep:
-            return None
-        paths = [self._epoch_dir(table, e) for e in keep]
-        return self._read(manifest, table, paths).filter(pred)
+        return self._read(manifest, table, self._raw_paths(table, committed))
 
     def read_merged(self, table: str, as_of_epoch: int) -> DataFrame | None:
         """Resolved current state of a merge table as of an epoch: the latest
@@ -289,54 +231,14 @@ class Catalog:
             return None
         return self._read(manifest, table, [path])
 
-    def read_incremental(
-        self, table: str, from_epoch: int, to_epoch: int
-    ) -> DataFrame | None:
-        """Iceberg incremental scan: rows committed in epochs
-        (from_epoch, to_epoch]. For delta tables this is exactly the
-        appended rows in the range (incremental-append scan); for merge
-        tables it is the NET change per key — the latest row per key among
-        rows touched in the range (the CDC net-changes view). This is what
-        a downstream consumer (indexer, dedup refresher, corpus builder)
-        tails instead of rescanning the whole table each epoch — at
-        10^10-URL scale the difference between O(epoch delta) and O(table).
-
-        None if no epoch in the range touched the table; raises if part of
-        the range was expired (its per-epoch dirs are gone, as in Iceberg
-        once expire_snapshots passes a snapshot)."""
-        manifest = self.read_manifest()
-        committed = [e for e in _committed(manifest, table, to_epoch) if e > from_epoch]
-        if not committed:
-            return None
-        expired_to = manifest.get("expired", {}).get(table, -1)
-        if expired_to >= min(committed):
-            raise ValueError(
-                f"incremental read of {table} ({from_epoch}, {to_epoch}]: "
-                f"deltas <= {expired_to} expired"
-            )
-        df = self._read(manifest, table, [self._epoch_dir(table, e) for e in committed])
-        if table in MERGE_TABLES:
-            df = self._resolve_latest(table, df)
-        return df
-
     def rollback_to(self, epoch: int) -> int:
         """Iceberg ``rollback_to_snapshot``: make ``epoch`` the current
         state again. Epochs above it leave the manifest atomically (readers
         see the old state or the rolled-back one, never a mix), their
         now-orphaned per-epoch dirs are reclaimed, and compactions whose
-        base folds in rolled-back rows are dropped. Refused when that
-        compaction is the only copy of expired deltas — rolling back there
-        would lose the pre-rollback rows too (Iceberg refuses the same way
-        once expire_snapshots passed the target). Returns epochs dropped."""
+        base folds in rolled-back rows are dropped. Returns epochs dropped."""
         manifest = self.read_manifest()
         comps = manifest.get("compactions", {})
-        for t, comp in comps.items():
-            expired_to = manifest.get("expired", {}).get(t, -1)
-            if comp["as_of"] > epoch and expired_to >= 0:
-                raise ValueError(
-                    f"cannot roll back to epoch {epoch}: {t} deltas <= "
-                    f"{expired_to} exist only inside compact={comp['as_of']}"
-                )
         dropped = [e for e in manifest["epochs"] if e["epoch"] > epoch]
         manifest["epochs"] = [e for e in manifest["epochs"] if e["epoch"] <= epoch]
         stale_comp_dirs = []
@@ -355,13 +257,7 @@ class Catalog:
                     shutil.rmtree(path)
         return len(dropped)
 
-    def counters(self, epoch: int) -> dict | None:
-        for e in self.read_manifest()["epochs"]:
-            if e["epoch"] == epoch:
-                return e["counters"]
-        return None
-
-    # ---- maintenance (Iceberg rewrite_data_files / expire_snapshots analogs) ----
+    # ---- maintenance (Iceberg rewrite_data_files analog) ---------------------------
     def compact_delta(self, table: str, as_of_epoch: int) -> int:
         """Rewrite a delta table's per-epoch partitions <= as_of_epoch into
         one consolidated base (Iceberg ``rewrite_data_files``). Without this,
@@ -370,14 +266,11 @@ class Catalog:
         on every seen-set anti-join. Reads are unchanged in value: the base
         carries each row's original epoch column, so lineage survives and
         ``read_delta_union(t, E)`` still returns exactly the union of deltas
-        <= E (base + post-compaction deltas). Original partitions are kept
-        until ``expire_deltas_before`` (time travel below the compaction
-        point keeps working, as with Iceberg snapshot expiry).
+        <= E (base + post-compaction deltas).
 
         For merge tables the base is the RESOLVED state (latest row per key)
         as of the compaction point — superseded statuses are dropped, so time
-        travel below the point needs the raw per-epoch dirs (kept until
-        ``expire_deltas_before``).
+        travel below the point reads the raw per-epoch dirs, which are kept.
 
         Returns the base's row count, observed on the rewrite job itself
         (no re-read); the base's schema replaces the table's manifest
@@ -388,9 +281,10 @@ class Catalog:
         if table not in DELTA_TABLES | MERGE_TABLES:
             raise ValueError(f"{table} is not a delta table")
         manifest = self.read_manifest()
-        if not _committed(manifest, table, as_of_epoch):
+        committed = _committed(manifest, table, as_of_epoch)
+        if not committed:
             return 0
-        df = self._read(manifest, table, self._raw_paths(manifest, table, as_of_epoch))
+        df = self._read(manifest, table, self._raw_paths(table, committed))
         if table in MERGE_TABLES:
             df = self._resolve_latest(table, df)
         path = self._compact_dir(table, as_of_epoch)
@@ -414,152 +308,12 @@ class Catalog:
                 shutil.rmtree(old)
         return n
 
-    def snapshot_diff(
-        self, table: str, from_epoch: int, to_epoch: int
-    ) -> DataFrame | None:
-        """Iceberg changelog view (`create_changelog_view` analog) between
-        two committed states of a MERGE table: one row per key whose
-        resolved state changed in (from_epoch, to_epoch], classified
-        'insert' (key absent at from_epoch) or 'update', with the before
-        and after rows carried as structs.
-
-        Shape at 10^10 keys: the candidate set is read_incremental's NET
-        change (keys TOUCHED in the range — O(epoch delta), never the
-        table), and the before-state lookup joins those candidates against
-        the resolved from_epoch state on the merge key — the same
-        bucket-partitioned key both sides store under, so the join is
-        storage-partitioned; the accumulated table streams through it
-        once and only candidate keys survive the probe. None if nothing
-        in the range touched the table."""
-        from pyspark.sql import functions as F
-
-        if table not in MERGE_TABLES:
-            raise ValueError(
-                f"snapshot_diff is a merge-table changelog; {table} is "
-                "append-only — its changelog IS read_incremental"
-            )
-        after = self.read_incremental(table, from_epoch, to_epoch)
-        if after is None:
-            return None
-        key, seq = _MERGE_KEY[table], _EPOCH_COL[table]
-        # the seq column moves on every touch; "changed" means the PAYLOAD
-        # moved, so the identity compare excludes it
-        payload = [c for c in after.columns if c != seq]
-        before = self.read_merged(table, from_epoch)
-        a = after.select(F.col(key), F.struct(*after.columns).alias("after"))
-        if before is None:
-            return a.select(
-                key, F.lit("insert").alias("change_type"),
-                F.lit(None).cast(a.schema["after"].dataType).alias("before"),
-                "after",
-            )
-        b = before.select(F.col(key), F.struct(*before.columns).alias("before"))
-        return (
-            a.join(b, key, "left")
-            .select(
-                key,
-                F.when(F.col("before").isNull(), F.lit("insert"))
-                .otherwise(F.lit("update"))
-                .alias("change_type"),
-                "before",
-                "after",
-            )
-            # touched-but-identical keys are not "changes" (Iceberg's net
-            # changelog omits them): compare the payload columns, not the
-            # seq column, which moves on every touch
-            .filter(
-                F.col("before").isNull()
-                | (
-                    F.struct(*[F.col(f"before.{c}") for c in payload])
-                    != F.struct(*[F.col(f"after.{c}") for c in payload])
-                )
-            )
-        )
-
-    def file_stats(self, table: str, as_of_epoch: int | None = None) -> DataFrame:
-        """Small-files monitor (Iceberg `files` metadata-table analog): one
-        row per committed epoch directory — file count and bytes — plus
-        the compacted base if present (kind='base'). The gauge that sets
-        `CrawlConfig.compact_every`: a delta table read unions one dir per
-        epoch, and thousands of tiny files is the classic failure this
-        catalog's compaction exists to prevent. Driver-side directory walk
-        over the manifest's epoch list — bounded by epoch count (KBs),
-        never data-sized."""
-        manifest = self.read_manifest()
-        if as_of_epoch is None and manifest["epochs"]:
-            as_of_epoch = manifest["epochs"][-1]["epoch"]
-        rows: list[tuple] = []
-
-        def _du(path: str) -> tuple[int, int]:
-            n = b = 0
-            for root, _, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        n += 1
-                        b += os.path.getsize(os.path.join(root, f))
-            return n, b
-
-        if as_of_epoch is not None:
-            for e in _committed(manifest, table, as_of_epoch):
-                path = self._epoch_dir(table, e)
-                if os.path.exists(path):
-                    n, b = _du(path)
-                    rows.append(("delta", e, n, b))
-        comp = manifest.get("compactions", {}).get(table)
-        if comp is not None:
-            base = self._compact_dir(table, comp["as_of"])
-            if os.path.exists(base):
-                n, b = _du(base)
-                rows.append(("base", comp["as_of"], n, b))
-        return self.spark.createDataFrame(
-            rows, "kind string, epoch int, n_files long, total_bytes long"
-        )
-
-    def expire_deltas_before(self, table: str, epoch: int) -> int:
-        """Delete a delta table's per-epoch directories <= epoch (Iceberg
-        ``expire_snapshots``). Only legal below an existing compaction point
-        — current-state reads are unaffected; time travel below the expiry
-        boundary becomes unavailable, as in Iceberg. Returns dirs removed."""
-        manifest = self.read_manifest()
-        comp = manifest.get("compactions", {}).get(table)
-        if comp is None or epoch > comp["as_of"]:
-            raise ValueError(
-                f"cannot expire {table} deltas <= {epoch}: not covered by a compaction"
-            )
-        removed = 0
-        for e in _committed(manifest, table, epoch):
-            path = self._epoch_dir(table, e)
-            if os.path.exists(path):
-                shutil.rmtree(path)
-                removed += 1
-        manifest.setdefault("expired", {})[table] = max(
-            epoch, manifest.get("expired", {}).get(table, -1)
-        )
-        self._write_manifest(manifest)
-        return removed
-
     def _compact_dir(self, table: str, as_of: int) -> str:
         return os.path.join(self.root, table, f"compact={as_of}")
 
-    def _raw_paths(self, manifest: dict, table: str, as_of_epoch: int) -> list[str]:
-        """Dirs of the raw per-epoch partitions <= as_of_epoch, ignoring any
-        compaction; once deltas were expired, the previous compacted base
-        stands in under the surviving deltas (requires that base to cover
-        as_of_epoch)."""
-        committed = _committed(manifest, table, as_of_epoch)
-        expired_to = manifest.get("expired", {}).get(table, -1)
-        if expired_to < 0:
-            return [self._epoch_dir(table, e) for e in committed]
-        comp = manifest.get("compactions", {}).get(table)
-        if comp is None or comp["as_of"] > as_of_epoch:
-            raise ValueError(
-                f"time travel to epoch {as_of_epoch} of {table}: deltas <= "
-                f"{expired_to} expired"
-            )
-        live = [e for e in committed if e > comp["as_of"]]
-        return [self._compact_dir(table, comp["as_of"])] + [
-            self._epoch_dir(table, e) for e in live
-        ]
+    def _raw_paths(self, table: str, epochs: list[int]) -> list[str]:
+        """Dirs of the raw per-epoch partitions, ignoring any compaction."""
+        return [self._epoch_dir(table, e) for e in epochs]
 
 
 def _committed(manifest: dict, table: str, as_of_epoch: int) -> list[int]:

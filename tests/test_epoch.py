@@ -125,6 +125,8 @@ def test_epoch_telemetry_sections(crawl_run):
         tele = c["_telemetry"]
         assert tele["jobs"] > 0 and tele["stages"] >= tele["jobs"]
         _check_telemetry(tele, ("read_state", "ingest", "schedule", "stage_writes", "commit"))
+        # CFG sets no global budget, so no epoch's schedule is cut
+        assert tele["sections"]["schedule"]["budget_cut"] is False
         walls = tele["sections"]["stage_writes"]["table_wall_seconds"]
         assert {"seen", "frontier", "schedule"} <= walls.keys()
     for e in cat.read_manifest()["epochs"]:
@@ -427,7 +429,8 @@ def test_global_budget_caps_schedule(
     root = tmp_path_factory.mktemp("crawl_gb")
     cat = Catalog(spark, str(root))
     cfg = CrawlConfig(epoch_seconds=6, hot_host_salt=2, global_budget=k)
-    E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 1, cfg)
+    counters = E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 1, cfg)
+    assert counters[0]["_telemetry"]["sections"]["schedule"]["budget_cut"] is True
 
     sched = cat.read_delta_union("schedule", 0)
     assert sched.count() == k
@@ -444,6 +447,45 @@ def test_global_budget_caps_schedule(
     assert bumped.count() == n_base - k
     # bumped rows re-enter next epoch
     assert bumped.filter(F.col("ready_epoch") == 1).count() == n_base - k
+
+
+def test_fitting_schedule_skips_host_rank_and_topk(
+    spark, pages_df, seeds_df, robots_df, tmp_path_factory, crawl_run, monkeypatch
+):
+    """A schedule that fits cfg.global_budget is kept as is: the host rank
+    and the top-k never run, and the crawl's state equals that of the same
+    crawl with no budget (the top-k of n <= k rows keeps all n)."""
+    from webcrawler_spark.operators import graph, topk
+
+    def boom(*a, **k):
+        raise AssertionError("ranked a schedule that fits the budget")
+
+    monkeypatch.setattr(graph, "host_rank", boom)
+    monkeypatch.setattr(topk, "threshold_topk", boom)
+    root = tmp_path_factory.mktemp("crawl_gb_fits")
+    cat = Catalog(spark, str(root))
+    cfg = CrawlConfig(
+        epoch_seconds=6, hot_host_salt=2, global_budget=10**6, use_host_rank=True
+    )
+    counters = E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, cfg)
+    assert all(
+        c["_telemetry"]["sections"]["schedule"]["budget_cut"] is False
+        for c in counters
+    )
+
+    base_cat, _ = crawl_run  # global_budget=0, same input; epochs 0-1 alike
+
+    def rows(df):
+        return df.columns, sorted((tuple(r) for r in df.collect()), key=repr)
+
+    for e in (0, 1):
+        for read in (
+            lambda c: c.read_delta_union("schedule", e),
+            lambda c: c.read_snapshot("deferred", e),
+            lambda c: c.read_merged("frontier", e),
+            lambda c: c.read_delta_union("seen", e),
+        ):
+            assert rows(read(cat)) == rows(read(base_cat)), e
 
 
 def test_global_budget_host_rank_steering(spark):

@@ -80,9 +80,11 @@ class CrawlConfig:
     # per-host politeness schedule: the top `global_budget` schedule rows by
     # (priority [+ host-rank boost] desc, url_norm asc) are kept — exact
     # large-k selection via topk.threshold_topk, no full sort — and the rest
-    # are deferred with reason="global_budget". 0 = off (reference parity:
-    # the reference has no global cap, capacity is implicit in its fetcher
-    # shard count).
+    # are deferred with reason="global_budget". The cut (and the host rank
+    # below) runs only when the schedule has more than `global_budget`
+    # rows: a schedule that fits is kept as is, counted on its own
+    # materialization. 0 = off (reference parity: the reference has no
+    # global cap, capacity is implicit in its fetcher shard count).
     global_budget: int = 0
 
     # PageRank-ordered crawling (the classic Cho/Page crawl-ordering
@@ -90,7 +92,8 @@ class CrawlConfig:
     # priority + host_rank_weight * normalized-host-PageRank computed from
     # the links discovered so far — well-linked hosts win the capacity
     # fight. Only meaningful with global_budget > 0 (the per-host politeness
-    # window is invariant to a host-constant boost).
+    # window is invariant to a host-constant boost), and computed only in
+    # an epoch whose schedule overflows the budget.
     use_host_rank: bool = False
     host_rank_weight: float = 100.0
     host_rank_iters: int = 3

@@ -47,15 +47,38 @@ def segment(text: Column, mode: str = "lines", width: int = CHUNK_WIDTH) -> Colu
         return F.filter(F.split(text, "\n"), lambda l: F.trim(l) != "")
     if mode != "chunks":
         raise ValueError(f"unknown segment mode: {mode}")
-    toks = _tokens(text)
-    n = F.size(toks)
-    nchunks = F.ceil(n.cast("double") / F.lit(float(width))).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), nchunks - 1),
-        lambda i: F.array_join(F.slice(toks, i * width + 1, width), " "),
+    # one fold over the token stream carrying (done chunks, open chunk,
+    # its token count): a lambda that indexed ``toks`` would re-split the
+    # text once per chunk, since the interpreted lambda re-evaluates every
+    # outer expression it references
+    zero = F.struct(
+        F.array().cast("array<string>").alias("done"),
+        F.lit("").alias("cur"),
+        F.lit(0).alias("cnt"),
     )
-    # sequence(0, -1) DESCENDS rather than being empty — guard empty text
-    return F.when(n > 0, chunks).otherwise(F.array().cast("array<string>"))
+
+    def step(acc: Column, t: Column) -> Column:
+        full = acc["cnt"] == width
+        return F.struct(
+            F.when(full, F.concat(acc["done"], F.array(acc["cur"])))
+            .otherwise(acc["done"])
+            .alias("done"),
+            F.when(full | (acc["cnt"] == 0), t)
+            .otherwise(F.concat_ws(" ", acc["cur"], t))
+            .alias("cur"),
+            F.when(full, F.lit(1)).otherwise(acc["cnt"] + 1).alias("cnt"),
+        )
+
+    chunks = F.aggregate(
+        _tokens(text),
+        zero,
+        step,
+        lambda acc: F.when(
+            acc["cnt"] > 0, F.concat(acc["done"], F.array(acc["cur"]))
+        ).otherwise(acc["done"]),
+    )
+    # null text segments to no chunks, like empty text
+    return F.coalesce(chunks, F.array().cast("array<string>"))
 
 
 def line_table(
@@ -207,65 +230,66 @@ def c4_line_filter(
 
 
 def _ngrams(toks: Column, n: int) -> Column:
-    """Overlapping word n-grams of a token array, space-joined."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    # sequence(1, 0) DESCENDS rather than being empty — guard short docs
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+    """Overlapping word n-grams of a token array, space-joined: the i-th
+    gram zips the i-th elements of ``toks`` shifted by 0..n-1, so the token
+    array is evaluated n times per row, never once per gram."""
+    m = F.size(toks) - n + 1
+    grams = F.slice(toks, 1, m)
+    for j in range(2, n + 1):
+        grams = F.zip_with(grams, F.slice(toks, j, m), lambda a, b: F.concat_ws(" ", a, b))
+    # slice() refuses a negative length — guard short docs
+    return F.when(m >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
 def _dup_beyond_first(sorted_arr: Column) -> tuple[Column, Column]:
     """(count, chars) of occurrences beyond the first of each distinct
-    element — one linear pass over the pre-sorted array (element i is a
-    repeat iff it equals element i-1), never a quadratic distinct×all scan."""
-    idx = F.sequence(F.lit(2), F.size(sorted_arr))
-    rep = F.filter(
-        F.when(F.size(sorted_arr) >= 2, idx).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.element_at(sorted_arr, i) == F.element_at(sorted_arr, i - 1),
+    element — one fold over the pre-sorted array (an element is a repeat
+    iff it equals the previous one), never a quadratic distinct×all scan.
+    The fold carries the previous element instead of indexing the array,
+    so the array (and the sort behind it) is evaluated once per row."""
+    zero = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("n"),
+        F.lit(0).cast("long").alias("chars"),
     )
-    n_dup = F.size(rep)
-    dup_chars = F.aggregate(
-        rep,
-        F.lit(0).cast("long"),
-        lambda acc, i: acc + F.length(F.element_at(sorted_arr, i)),
-    )
-    return n_dup, dup_chars
+
+    def step(acc: Column, g: Column) -> Column:
+        rep = g == acc["prev"]  # null (never a repeat) for the first element
+        return F.struct(
+            g.alias("prev"),
+            (acc["n"] + F.when(rep, 1).otherwise(0)).alias("n"),
+            (acc["chars"] + F.when(rep, F.length(g)).otherwise(0)).alias("chars"),
+        )
+
+    out = F.aggregate(sorted_arr, zero, step)
+    return out["n"], out["chars"]
 
 
 def _dup_any_occurrence_chars(sorted_arr: Column) -> Column:
-    """Chars of EVERY occurrence of any element occurring >= 2 times — an
-    element of the sorted array is part of a duplicate run iff it equals a
-    neighbor. Linear pass, as above."""
-    size = F.size(sorted_arr)
-    idx = F.when(size >= 1, F.sequence(F.lit(1), size)).otherwise(
-        F.array().cast("array<int>")
+    """Chars of EVERY occurrence of any element occurring >= 2 times — the
+    sum over runs of equal neighbours of length >= 2 of run x chars. One
+    fold carrying (prev, run, total) that closes a run when the element
+    changes, as above."""
+    zero = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).cast("long").alias("total"),
     )
 
-    def in_run(i: Column) -> Column:
-        prev_eq = (i > 1) & (
-            F.element_at(sorted_arr, i)
-            == F.element_at(sorted_arr, F.greatest(i - 1, F.lit(1)))
-        )
-        next_eq = (i < size) & (
-            F.element_at(sorted_arr, i)
-            == F.element_at(sorted_arr, F.least(i + 1, size))
-        )
-        return prev_eq | next_eq
+    def closed(acc: Column) -> Column:
+        return acc["total"] + F.when(
+            acc["run"] >= 2, acc["run"] * F.length(acc["prev"])
+        ).otherwise(0)
 
-    return F.aggregate(
-        idx,
-        F.lit(0).cast("long"),
-        lambda acc, i: acc
-        + F.when(in_run(i), F.length(F.element_at(sorted_arr, i))).otherwise(
-            F.lit(0)
-        ),
-    )
+    def step(acc: Column, g: Column) -> Column:
+        same = g == acc["prev"]
+        return F.struct(
+            g.alias("prev"),
+            F.when(same, acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
+            F.when(same, acc["total"]).otherwise(closed(acc)).alias("total"),
+        )
+
+    return F.aggregate(sorted_arr, zero, step, closed)
 
 
 def _top_run(sorted_arr: Column) -> Column:
@@ -495,14 +519,7 @@ def fineweb_filters(
         lines, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
     srt = F.array_sort(lines)
-    dup_chars = F.aggregate(
-        F.filter(
-            F.sequence(F.lit(2), n),
-            lambda i: F.element_at(srt, i) == F.element_at(srt, i - 1),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc + F.length(F.element_at(srt, i)),
-    )
+    _, dup_chars = _dup_beyond_first(srt)
     frac = lambda a, b: F.round(  # noqa: E731
         a.cast("double") / F.greatest(b.cast("double"), F.lit(1.0)), 6
     )

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -169,9 +169,9 @@ def apply_global_budget(
         )
         score = score + F.coalesce(F.col("_boost"), F.lit(0.0))
 
-    # no persist: upstream `pending` is already cached in run_epoch, so the
-    # extra passes (count, band filter, anti-join) re-run only the bounded
-    # scheduling windows; a persist here would outlive the epoch
+    # no persist: run_epoch hands in the schedule already materialized, so
+    # the extra passes (count, band filter, anti-join) re-read its cached
+    # rows; a persist here would outlive the epoch
     sched = sched.withColumn("_gscore", score)
     kept = T.threshold_topk(sched, "_gscore", cfg.global_budget, "url_norm")
     bumped = (
@@ -477,8 +477,15 @@ def run_epoch(
         rejected = rejected.unionByName(gate_rejected, allowMissingColumns=True)
 
     # ---- 3b. global fetch budget (fleet capacity) over the politeness
-    # schedule, optionally PageRank-steered (CrawlConfig.global_budget)
-    if cfg.global_budget > 0:
+    # schedule, optionally PageRank-steered (CrawlConfig.global_budget).
+    # The schedule's row count rides its own materialization (Observation,
+    # no extra job); a schedule that fits the budget is kept as is, since
+    # the top-k of n <= k rows keeps all n and bumps none — the host rank,
+    # the top-k and the bumped anti-join run only when the budget cuts
+    obs = Observation()
+    schedule = _materialize(schedule.observe(obs, F.count(F.lit(1)).alias("n")))
+    budget_cut = 0 < cfg.global_budget < obs.get["n"]
+    if budget_cut:
         links_so_far = (
             cat.read_delta_union("links", epoch - 1)
             if cfg.use_host_rank and epoch > 0
@@ -488,7 +495,7 @@ def run_epoch(
             schedule, links_so_far, epoch, cfg, deferred_new.columns
         )
         deferred_new = deferred_new.unionByName(bumped)
-    schedule = _materialize(schedule)
+        schedule = _materialize(schedule)
     # deferred_new feeds THREE consumers (the deferred snapshot, the
     # frontier delta's 'deferred' arm, and — via unions — their counts);
     # without the materialization each consumer re-runs the politeness
@@ -496,7 +503,7 @@ def run_epoch(
     # writes were ~50% of the all-opt-ins epoch wall). rejected rides the
     # same frontier arm but is a cheap filter over materialized pending.
     deferred_new = _materialize(deferred_new)
-    tele.mark("schedule")
+    tele.mark("schedule")["budget_cut"] = budget_cut
 
     # ---- 4. "fetch" = equi join against the page table (J5 replaces S10 HTTP)
     fetched = schedule.join(pages_prepared, "url_norm", "left")

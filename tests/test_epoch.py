@@ -155,6 +155,92 @@ def test_resume_round_trip(spark, pages_df, seeds_df, robots_df, tmp_path_factor
     assert fa == fb
 
 
+# the miners and the compaction cadence on: both now run inside run_epoch
+MINING_CFG = CrawlConfig(
+    epoch_seconds=6,
+    hot_host_salt=2,
+    use_bloom=True,
+    mine_dust=True,
+    collapse_mirrors=True,
+    compact_every=2,
+)
+
+
+@pytest.fixture(scope="module")
+def mining_run(spark, pages_df, seeds_df, robots_df, tmp_path_factory):
+    """A 3-epoch MINING_CFG crawl in one call, recording the epoch each
+    miner is asked to mine through."""
+    calls = {"dust": [], "mirrors": []}
+
+    def recorded(name, miner):
+        def wrapped(cat, through_epoch, cfg):
+            calls[name].append(through_epoch)
+            return miner(cat, through_epoch, cfg)
+
+        return wrapped
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("crawl_mining")))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(E, "_mine_dust_rules", recorded("dust", E._mine_dust_rules))
+        mp.setattr(E, "_mine_mirror_losers", recorded("mirrors", E._mine_mirror_losers))
+        counters = E.run_epochs(
+            spark, cat, pages_df, seeds_df, robots_df, N_EPOCHS, MINING_CFG
+        )
+    return cat, counters, calls
+
+
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _semantic(counters):
+    return [{k: v for k, v in c.items() if k != "_telemetry"} for c in counters]
+
+
+def test_epoch_mines_only_the_dims_it_applies(mining_run):
+    """Epoch e mines the evidence committed through e - 1 and nothing else:
+    an n-epoch crawl mines each dim n - 1 times, never after its last
+    epoch, and epoch 0 (no evidence) submits no mining job."""
+    _, counters, calls = mining_run
+    expected = list(range(N_EPOCHS - 1))
+    assert calls == {"dust": expected, "mirrors": expected}
+    for sec in ("mine_mirrors", "mine_dust"):
+        assert counters[0]["_telemetry"]["sections"][sec]["jobs"] == 0
+    assert not {"mirror_loser_hosts", "dust_rule_hosts"} & counters[0].keys()
+    for c in counters[1:]:
+        assert {"mirror_loser_hosts", "dust_rule_hosts"} <= c.keys()
+    sections = list(counters[-1]["_telemetry"]["sections"])
+    assert sections[sections.index("commit") + 1:] in ([], ["compact"])
+    assert "maintenance" in counters[1]  # compact_every=2
+
+
+def test_resume_with_mining_and_compaction(
+    spark, pages_df, seeds_df, robots_df, tmp_path_factory, mining_run
+):
+    """Crawl 1 epoch, reopen the catalog and crawl 2 more, with the miners
+    and the compaction cadence on: the same state as one 3-epoch call."""
+    cat_full, counters_full, _ = mining_run
+    root = tmp_path_factory.mktemp("crawl_mining_resume")
+    first = E.run_epochs(
+        spark, Catalog(spark, str(root)), pages_df, seeds_df, robots_df, 1, MINING_CFG
+    )
+    cat = Catalog(spark, str(root))
+    rest = E.run_epochs(spark, cat, pages_df, seeds_df, robots_df, 2, MINING_CFG)
+
+    last = N_EPOCHS - 1
+    assert _semantic(first + rest) == _semantic(counters_full)
+    manifest = lambda c: [e["counters"] for e in c.read_manifest()["epochs"]]
+    assert manifest(cat) == manifest(cat_full)
+    assert cat.read_manifest()["compactions"] == cat_full.read_manifest()["compactions"]
+    for table in ("seen", "web_content", "fetch_digests"):
+        assert _rows(cat.read_delta_union(table, last)) == _rows(
+            cat_full.read_delta_union(table, last)
+        ), table
+    assert _rows(cat.read_merged("frontier", last)) == _rows(
+        cat_full.read_merged("frontier", last)
+    )
+
+
 def test_uncommitted_epoch_invisible(spark, pages_df, seeds_df, robots_df, tmp_path_factory):
     """Snapshot isolation: data staged without a manifest commit is unread."""
     root = tmp_path_factory.mktemp("crawl_iso")

@@ -104,9 +104,10 @@ def test_mirror_host_collapsed_from_budget(spark, tmp_path_factory):
     # mirror leaves are never even discovered (their parents were dropped)
     assert "https://mirror.com/leaf1" not in frontier
     assert "https://mirror.com/leaf2" not in frontier
-    # loser-dim telemetry: mined after every epoch once evidence exists
-    assert counters[0]["mirror_loser_hosts"] == 1
-    assert counters[1]["mirror_loser_hosts"] == 1
+    # loser-dim counter: the dim each epoch applied, mined from the evidence
+    # committed before it (none exists at epoch 0)
+    assert "mirror_loser_hosts" not in counters[0]
+    assert counters[1]["mirror_loser_hosts"] == counters[2]["mirror_loser_hosts"] == 1
 
 
 def test_mirror_flag_off_is_parity(spark, tmp_path_factory):

@@ -105,10 +105,10 @@ class CrawlConfig:
     # queries verbatim).
     strip_tracking: bool = False
 
-    # DUST rule mining (operators/dust.py, Bar-Yossef et al. WWW'07): after
-    # each epoch, mine content-irrelevant query params per host from the
-    # accumulated web_content (url_norm, content_hash) evidence and strip
-    # them from the NEXT epochs' candidate URLs (columns.strip_params_by_
+    # DUST rule mining (operators/dust.py, Bar-Yossef et al. WWW'07): each
+    # epoch mines content-irrelevant query params per host from the
+    # fetch_digests (url_norm, content_hash) evidence committed before it
+    # and strips them from its candidate URLs (columns.strip_params_by_
     # rules) — learned aliases (session ids, affiliate tags) collapse to one
     # url_norm before the seen anti-join, so the fetch never happens. Off by
     # default (byte-parity: no url_norm rewrite).

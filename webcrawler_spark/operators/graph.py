@@ -43,7 +43,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank) after `n_iter` damped iterations with dangling-mass
     redistribution. Node set = src ∪ dst of the (deduplicated) edge list;
@@ -57,9 +56,8 @@ def pagerank(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         # Empty edge list (e.g. epoch 0 discovered no cross-host links, or
@@ -99,8 +97,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
@@ -111,7 +108,6 @@ def trustrank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): PageRank
     with the teleport vector restricted to a trusted seed set — trust flows
@@ -138,10 +134,9 @@ def trustrank(
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().join(
         nodes, "node"
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-        seed_nodes = seed_nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
+    seed_nodes = seed_nodes.localCheckpoint(eager=True)
     s = seed_nodes.count()
     if s == 0:
         # no trusted seed survives in the graph — nothing to propagate
@@ -152,8 +147,7 @@ def trustrank(
         "node",
         F.when(F.col("_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0)).alias("t"),
     )
-    if checkpoint:
-        nodes_t = nodes_t.localCheckpoint(eager=True)
+    nodes_t = nodes_t.localCheckpoint(eager=True)
     deg = out_degrees(e)
     ranks = nodes_t.select("node", "t", F.col("t").alias("rank"))
     for _ in range(n_iter):
@@ -186,8 +180,7 @@ def trustrank(
                 ).alias("rank"),
             )
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", "rank")
 
 
@@ -196,7 +189,6 @@ def opic(
     n_iter: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """OPIC — Adaptive On-line Page Importance Computation (Abiteboul,
     Preda & Cobéna, WWW 2003), the crawl-ordering importance score designed
@@ -231,9 +223,8 @@ def opic(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("opic", F.lit(0.0)).select("node", "opic")
@@ -270,8 +261,7 @@ def opic(
                 (F.col("hist") + F.col("cash")).alias("hist"),
             )
         )
-        if checkpoint:
-            state = state.localCheckpoint(eager=True)
+        state = state.localCheckpoint(eager=True)
     return state.select(
         "node",
         ((F.col("hist") + F.col("cash")) / F.lit(float(n_iter + 1))).alias("opic"),
@@ -300,7 +290,6 @@ def hits(
     n_iter: int = 2,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) after ``n_iter`` rounds.
 
@@ -322,9 +311,8 @@ def hits(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
 
     def _normalize(df: DataFrame, col: str) -> DataFrame:
         norm = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col)))).first()[0] or 1.0
@@ -345,8 +333,7 @@ def hits(
             ),
             "hub",
         )
-        if checkpoint:
-            hubs = hubs.localCheckpoint(eager=True)
+        hubs = hubs.localCheckpoint(eager=True)
         a = (
             e.join(hubs, e["src"] == hubs["node"])
             .select(F.col("dst").alias("node"), F.col("hub").alias("c"))
@@ -359,8 +346,7 @@ def hits(
             ),
             "authority",
         )
-        if checkpoint:
-            auth = auth.localCheckpoint(eager=True)
+        auth = auth.localCheckpoint(eager=True)
     return hubs.join(auth, "node").select("node", "hub", "authority")
 
 
@@ -371,7 +357,6 @@ def spam_mass(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Spam-mass estimation (Gyöngyi, Berkhin, Garcia-Molina & Pedersen,
     "Link Spam Detection Based on Mass Estimation", VLDB 2006): the part of
@@ -395,8 +380,8 @@ def spam_mass(
     the node set comes from the edge list).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    pr = pagerank(e, n_iter=n_iter, damping=damping, checkpoint=checkpoint)
-    tr = trustrank(e, seeds, n_iter=n_iter, damping=damping, checkpoint=checkpoint)
+    pr = pagerank(e, n_iter=n_iter, damping=damping)
+    tr = trustrank(e, seeds, n_iter=n_iter, damping=damping)
     # scale factors: s = |seeds ∩ graph|, n = |nodes| — two tiny counts
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -439,7 +424,6 @@ def salsa(
     n_iter: int = 2,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """SALSA (Lempel & Moran, WWW 2000): the Stochastic Approach for
     Link-Structure Analysis — HITS's mutual reinforcement replaced by a
@@ -469,9 +453,8 @@ def salsa(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     indeg = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("double").alias("indeg")
     )
@@ -494,8 +477,7 @@ def salsa(
             .agg(F.sum("c").alias("hub"))
         )
         hubs = h.join(outdeg, "node").select("node", "hub", "outdeg")
-        if checkpoint:
-            hubs = hubs.localCheckpoint(eager=True)
+        hubs = hubs.localCheckpoint(eager=True)
         # forward step: authorities gather hub mass split by out-degree
         a = (
             e.join(hubs, e["src"] == hubs["node"])
@@ -504,8 +486,7 @@ def salsa(
             .agg(F.sum("c").alias("authority"))
         )
         auth = a.join(indeg, "node").select("node", "authority", "indeg")
-        if checkpoint:
-            auth = auth.localCheckpoint(eager=True)
+        auth = auth.localCheckpoint(eager=True)
     return (
         nodes.join(hubs.select("node", "hub"), "node", "left")
         .join(auth.select("node", "authority"), "node", "left")

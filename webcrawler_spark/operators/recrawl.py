@@ -161,16 +161,40 @@ def update_recrawl_state(
     )
 
 
+def _banded_interval(
+    rate_bands: tuple[tuple[float, int], ...],
+    max_interval: int,
+    first_visit: Column | None = None,
+) -> tuple[Column, Column]:
+    """(change_rate, interval_epochs) over ``n_fetches``/``n_changes``
+    columns: change_rate = changes / (fetches - 1), NULL for a single
+    fetch; the interval walks ``rate_bands`` (rate >= threshold ->
+    interval), falls through to ``max_interval`` for cold pages, and a
+    single-fetch URL takes ``first_visit`` when it is non-null, else the
+    fastest band (optimistic first revisit). The one banding rule of
+    scheduler.recrawl_schedule and :func:`intervals_from_state`."""
+    rate = F.when(
+        F.col("n_fetches") > 1,
+        F.col("n_changes").cast("double") / (F.col("n_fetches") - 1).cast("double"),
+    )
+    interval = F.lit(max_interval)
+    for threshold, band in reversed(rate_bands):
+        interval = F.when(rate >= threshold, F.lit(band)).otherwise(interval)
+    fastest = F.lit(rate_bands[0][1])
+    if first_visit is not None:
+        fastest = F.coalesce(first_visit, fastest)
+    return rate, F.when(rate.isNull(), fastest).otherwise(interval)
+
+
 def intervals_from_state(
     state: DataFrame,
     rate_bands: tuple[tuple[float, int], ...] = ((0.5, 1), (0.25, 2), (0.1, 4)),
     max_interval: int = 8,
     hints: DataFrame | None = None,
 ) -> DataFrame:
-    """(url_norm, interval_epochs) from recrawl state — the same change-rate
-    banding as scheduler.recrawl_schedule (change_rate = changes/(fetches-1);
-    single-fetch URLs get the fastest band, optimistic first revisit), as a
-    pure projection over the state dim. No shuffle.
+    """(url_norm, interval_epochs) from recrawl state — the change-rate
+    banding of :func:`_banded_interval`, as a pure projection over the
+    state dim. No shuffle.
 
     ``hints`` (optional): (url_norm, hint_epochs) — the site's DECLARED
     revisit prior, e.g. sitemap changefreq mapped through
@@ -180,14 +204,7 @@ def intervals_from_state(
     MEASURED banding wins unconditionally — sites misdeclare changefreq,
     observations don't. Hints are clamped to [1, max_interval]; one
     left join on url_norm (broadcast when the hint dim is small)."""
-    rate = F.when(
-        F.col("n_fetches") > 1,
-        F.col("n_changes").cast("double") / (F.col("n_fetches") - 1).cast("double"),
-    )
-    interval = F.lit(max_interval)
-    for threshold, band in reversed(rate_bands):
-        interval = F.when(rate >= threshold, F.lit(band)).otherwise(interval)
-    first_visit = F.lit(rate_bands[0][1])
+    first_visit = None
     if hints is not None:
         # one row per URL even when several sitemaps declare it (the same
         # loc in two files is legal): keep the FASTEST declared interval —
@@ -205,8 +222,8 @@ def intervals_from_state(
             .agg(F.min("_hint").alias("_hint"))
         )
         state = state.join(h, "url_norm", "left")
-        first_visit = F.coalesce(F.col("_hint"), first_visit)
-    interval = F.when(rate.isNull(), first_visit).otherwise(interval)
+        first_visit = F.col("_hint")
+    _, interval = _banded_interval(rate_bands, max_interval, first_visit)
     return state.select("url_norm", interval.cast("int").alias("interval_epochs"))
 
 

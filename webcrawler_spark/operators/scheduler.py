@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig, DEFAULT_CONFIG
 from ..functions import columns as C
+from .recrawl import _banded_interval
 
 _ORDER = lambda: [  # noqa: E731 - shared total ordering (W1)
     F.desc("priority"),
@@ -308,14 +309,7 @@ def recrawl_schedule(
             F.sum("_chg").alias("n_changes"),
         )
     )
-    rate = F.when(
-        F.col("n_fetches") > 1,
-        F.col("n_changes").cast("double") / (F.col("n_fetches") - 1).cast("double"),
-    )
-    interval = F.lit(max_interval)
-    for threshold, band in reversed(rate_bands):
-        interval = F.when(rate >= threshold, F.lit(band)).otherwise(interval)
-    interval = F.when(rate.isNull(), F.lit(rate_bands[0][1])).otherwise(interval)
+    rate, interval = _banded_interval(rate_bands, max_interval)
     return per.select(
         id_col,
         F.col("n_fetches").cast("int"),

@@ -347,20 +347,25 @@ def phrase_count(text: Column, phrase_tokens: list[str]) -> Column:
     semantics: positional adjacency over the analyzed token stream, NOT a
     substring test — "new york" does not match "newark, york road").
     Native: one pass over candidate start positions with a higher-order
-    filter; no explode, no shuffle."""
-    toks = tokens(text)
+    filter; no explode, no shuffle. The token array is bound once as a
+    lambda variable: an interpreted lambda re-evaluates every outer
+    expression it references, so indexing ``tokens(text)`` directly would
+    re-tokenize the text per start position (quadratic in its length)."""
     n = len(phrase_tokens)
-    starts = F.sequence(F.lit(1), F.size(toks) - n + 1)
 
-    def _match(i: Column) -> Column:
-        cond = F.lit(True)
-        for j, t in enumerate(phrase_tokens):
-            cond = cond & (F.element_at(toks, i + j) == t)
-        return cond
+    def _count(toks: Column) -> Column:
+        def _match(i: Column) -> Column:
+            cond = F.lit(True)
+            for j, t in enumerate(phrase_tokens):
+                cond = cond & (F.element_at(toks, i + j) == t)
+            return cond
 
-    return F.when(F.size(toks) < n, F.lit(0)).otherwise(
-        F.size(F.filter(starts, _match))
-    )
+        starts = F.sequence(F.lit(1), F.size(toks) - n + 1)
+        return F.when(F.size(toks) < n, F.lit(0)).otherwise(
+            F.size(F.filter(starts, _match))
+        )
+
+    return F.transform(F.array(tokens(text)), _count)[0]
 
 
 def search_phrase(

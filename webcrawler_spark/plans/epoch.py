@@ -220,12 +220,6 @@ class _Telemetry:
         self._t, self._ids = t, ids
         return sec
 
-    def adopt(self, sections: dict) -> None:
-        """Take over the sections an inner recorder marked since this one's
-        last mark (run_epoch's, inside run_epochs)."""
-        self.sections.update(sections)
-        self._t, self._ids = time.perf_counter(), self._sched_ids()
-
     def record(self) -> dict:
         """Wall, jobs and stages since the recorder started, plus the
         per-section breakdown."""
@@ -270,35 +264,10 @@ def _persistent_rdd_ids(spark: SparkSession) -> set:
     return {e.getKey() for e in _persistent_rdd_entries(spark)}
 
 
-def _unpersist_ids(spark: SparkSession, ids: set) -> None:
-    if not ids:
-        return
-    for entry in _persistent_rdd_entries(spark):
-        try:
-            if entry.getKey() in ids:
-                entry.getValue().unpersist(False)
-        except Exception:
-            pass
-
-
-def _checkpoint_dim(spark: SparkSession, df: DataFrame, prev_ids: set):
-    """Eagerly checkpoint a freshly mined cross-epoch dim (dust rules,
-    mirror losers) and free the PREVIOUS epoch's dim blocks. Without the
-    checkpoint the mining query executes twice per epoch — once for the
-    telemetry count and again when the next epoch's gate materializes the
-    same lazy frame; without the id bookkeeping each re-mine would leak
-    one (small) checkpointed dim per epoch for the life of the crawl.
-    Returns (checkpointed_df, its_rdd_ids)."""
-    pre = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    new_ids = _persistent_rdd_ids(spark) - pre
-    _unpersist_ids(spark, prev_ids)
-    return out, new_ids
-
-
 def _free_epoch_blocks(spark: SparkSession, pre_ids: set) -> None:
     """Unpersist every RDD cached since the epoch started (the eager
-    localCheckpoints above + the graph operators' iteration checkpoints),
+    localCheckpoints above, the mined gate dims among them, + the graph
+    operators' iteration checkpoints),
     leaving pre-existing caches (pages_prepared) untouched — the epoch
     loop's block-manager footprint stays O(one epoch)."""
     for entry in _persistent_rdd_entries(spark):
@@ -319,10 +288,15 @@ def run_epoch(
     seeds: DataFrame | None = None,
     verify_extraction: bool = False,
     sitemap_hints: DataFrame | None = None,
-    dust_rules: DataFrame | None = None,
-    mirror_loser_hosts: DataFrame | None = None,
 ) -> dict:
     """Run one crawl epoch and commit its snapshot. Returns the counters.
+
+    The epoch is a function of the catalog as of ``epoch - 1``: it mines
+    the gate dims it applies (mirror losers with cfg.collapse_mirrors, DUST
+    rules with cfg.mine_dust) from the fetch_digests committed through
+    ``epoch - 1`` and compacts after its commit on the cfg.compact_every
+    cadence, so a resumed crawl runs exactly the epochs an uninterrupted
+    one does.
 
     ``pages_prepared`` must already be persisted AND materialized (the
     `prepare_pages` output after an action such as ``count()``): the
@@ -330,24 +304,22 @@ def run_epoch(
     epoch, so a lazily-persisted page table would lose its cache after
     this call and be re-canonicalized by the next. run_epochs does this.
 
-    ``mirror_loser_hosts``: optional one-column (host) dim from
-    `operators/mirrors.mirror_losers` — with cfg.collapse_mirrors on,
-    pending rows on these hosts are rejected before politeness spends
-    budget on them (run_epochs re-mines the dim per epoch from the
-    accumulated fetch_digests evidence). None = exact prior behavior.
-
-    ``dust_rules``: optional (host, dust_params) dim from
-    `operators/dust.dust_rules_dim` — learned content-irrelevant query
-    params stripped from this epoch's candidates at ingest (see
-    CrawlConfig.mine_dust; run_epochs re-mines it per epoch). None = exact
-    prior behavior.
-
     ``sitemap_hints``: optional (url_norm, interval_hours) dim from
     `sources/sitemap.recrawl_hints` — with cfg.recrawl on, a URL's FIRST
     revisit uses the declared changefreq interval (converted to epochs by
     cfg.epoch_seconds) instead of the optimistic fastest band; measured
     change rates take over from the second fetch. No-op without
-    cfg.recrawl; None = exact prior behavior."""
+    cfg.recrawl; None = exact prior behavior.
+
+    The counters carry, after the manifest commit (never persisted):
+    ``mirror_loser_hosts``/``dust_rule_hosts``, the rows of the dims this
+    epoch applied (absent at epoch 0, which has no evidence yet);
+    ``maintenance``, the compacted row counts; and ``_telemetry``, the
+    wall, Spark jobs and stages of the epoch and of each section in order:
+    read_state, mine_mirrors, mine_dust, ingest, pending, traps, schedule,
+    fetch, soft404, plan_outputs, stage_writes, commit, compact. The mining
+    sections are marked whenever their flag is on (0 jobs at epoch 0), and
+    compact only on a compaction epoch."""
     tele = _Telemetry(spark)
     _pre_rdd_ids = _persistent_rdd_ids(spark)
     prev = epoch - 1
@@ -378,6 +350,34 @@ def run_epoch(
         else:
             candidates = spark.createDataFrame([], _CAND_SCHEMA)
     tele.mark("read_state")
+
+    # ---- 1b. gate dims (opt-in), mined from the fetch_digests evidence
+    # committed through the previous epoch: mirror-loser hosts for the
+    # pending gate (2c), DUST rules for ingest. Each is materialized once,
+    # its row count riding that job (Observation, no extra job), so the
+    # gate and the counter read the same cached rows. An epoch mines only
+    # the dims it applies; nothing is held from one epoch to the next.
+    mined_counts: dict[str, int] = {}
+
+    def _mine(miner, counter: str, section: str) -> DataFrame | None:
+        dim = miner(cat, prev, cfg) if epoch > 0 else None
+        if dim is not None:
+            obs = Observation()
+            dim = _materialize(dim.observe(obs, F.count(F.lit(1)).alias("n")))
+            mined_counts[counter] = obs.get["n"]
+        tele.mark(section)
+        return dim
+
+    mirror_loser_hosts = (
+        _mine(_mine_mirror_losers, "mirror_loser_hosts", "mine_mirrors")
+        if cfg.collapse_mirrors
+        else None
+    )
+    dust_rules = (
+        _mine(_mine_dust_rules, "dust_rule_hosts", "mine_dust")
+        if cfg.mine_dust
+        else None
+    )
 
     # materialized once: consumed by the pending pool, the frontier snapshot
     # AND the seen delta — without the materialization each consumer re-runs
@@ -450,14 +450,8 @@ def run_epoch(
         # mirror losers: hosts proven to mirror a canonical partner's
         # content (cross-host fingerprint roll-up over the fetch_digests
         # evidence) — the canonical partner keeps crawling, the mirror
-        # stops costing fetch budget. run_epochs hands the dim in already
-        # checkpointed; the cheap re-materialization also covers direct
-        # run_epoch callers passing a lazy frame.
-        gate_dims.append(
-            _materialize(
-                mirror_loser_hosts.select(F.col("host").alias("_gh")).distinct()
-            )
-        )
+        # stops costing fetch budget. Materialized at 1b.
+        gate_dims.append(mirror_loser_hosts.select(F.col("host").alias("_gh")))
     if gate_dims:
         gate_hosts = gate_dims[0]
         for d in gate_dims[1:]:
@@ -811,10 +805,9 @@ def run_epoch(
         # from `ok` (cached fetched rows): content_hash needs only `text`,
         # and the docs lineage would re-run the extract_metadata python UDF
         # for this extra consumer (see recrawl note above). The epoch
-        # lineage column makes it a first-class delta table: the miners
-        # re-read ALL accumulated evidence every epoch, so without the
-        # compaction cadence the mining jobs pay one directory per epoch
-        # for the life of the crawl.
+        # lineage column makes it a first-class delta table that the
+        # compaction cadence folds: the miners re-read ALL accumulated
+        # evidence every epoch.
         to_stage["fetch_digests"] = ok.select(
             "url_norm", C.content_hash(F.col("text")).alias("content_hash")
         ).withColumn("epoch", F.lit(epoch))
@@ -890,6 +883,28 @@ def run_epoch(
     _free_epoch_blocks(spark, _pre_rdd_ids)
     tele.mark("commit")
     # after the commit: the manifest persists only the semantic counters
+    counters.update(mined_counts)
+    # periodic delta compaction (Iceberg rewrite_data_files cadence): the
+    # seen/links unions otherwise read one directory per prior epoch; the
+    # frontier (merge table) additionally re-resolves superseded status
+    # rows on every read until compacted. The postings deltas are on the
+    # same cadence: with build_index on, a year of hourly epochs is
+    # otherwise ~9k directories under every BM25 query; fetch_digests, or
+    # the miners would pay one directory per epoch for the life of the
+    # crawl.
+    if cfg.compact_every and (epoch + 1) % cfg.compact_every == 0:
+        tables = ["seen", "links", "frontier"]
+        if cfg.build_index:
+            tables.append("postings")
+        if cfg.mine_dust or cfg.collapse_mirrors:
+            tables.append("fetch_digests")
+        counters["maintenance"] = {
+            f"compact_{t}": cat.compact_delta(t, epoch) for t in tables
+        }
+        tele.mark("compact")
+    # non-semantic telemetry under ONE underscore key: the crawl's counters
+    # are a deterministic function of the inputs (pinned by the two-run
+    # compose test); wall clock and scheduler ids are not
     counters["_telemetry"] = tele.record()
     return counters
 
@@ -945,19 +960,18 @@ def run_epochs(
     pages_prepared: DataFrame | None = None,
 ) -> list[dict]:
     """Run ``n_epochs`` epochs, resuming after the last committed epoch
-    (S14: the manifest IS the offset).
+    (S14: the manifest IS the offset). Each epoch is one `run_epoch` call,
+    which mines its own gate dims and runs its own compaction, so a resume
+    needs no state beyond the catalog.
 
     ``pages_prepared``: optional pre-canonicalized page table (the
     `prepare_pages` output, already persisted+materialized by the caller) —
     lets the bench keep page prep as untimed setup while still driving THIS
-    loop, maintenance included, instead of a hand-rolled copy of it.
+    loop instead of a hand-rolled copy of it.
 
-    Each returned counters dict additionally carries the epoch's
-    telemetry under ``_telemetry`` (post-commit, never in the manifest):
-    ``wall_seconds`` and — where the scheduler's id counters are reachable
-    — ``jobs``/``stages`` submitted during the epoch, maintenance included,
-    and ``sections``, the same three figures per section: run_epoch's
-    sections, then ``mine_mirrors``, ``mine_dust`` and ``compact``."""
+    Returns run_epoch's counters per epoch, each with its ``_telemetry``
+    (post-commit, never in the manifest): sections read_state,
+    mine_mirrors, mine_dust, ingest, ..., stage_writes, commit, compact."""
     owns_pages = pages_prepared is None
     if owns_pages:
         pages_prepared = prepare_pages(pages).persist()
@@ -969,80 +983,21 @@ def run_epochs(
     last = cat.last_committed_epoch()
     start = 0 if last is None else last + 1
     out = []
-    dust_rules = None
-    dust_ids: set = set()
-    if cfg.mine_dust and start > 0:
-        # resume path: re-derive the rules the previous run would have held
-        mined = _mine_dust_rules(cat, start - 1, cfg)
-        if mined is not None:
-            dust_rules, dust_ids = _checkpoint_dim(spark, mined, dust_ids)
-    mirror_dim = None
-    mirror_ids: set = set()
-    if cfg.collapse_mirrors and start > 0:
-        mined = _mine_mirror_losers(cat, start - 1, cfg)
-        if mined is not None:
-            mirror_dim, mirror_ids = _checkpoint_dim(spark, mined, mirror_ids)
-
+    # a plain loop over the module-global run_epoch (the benchmark wraps it)
     for epoch in range(start, start + n_epochs):
-        tele = _Telemetry(spark)
-        counters = run_epoch(
-            spark,
-            cat,
-            pages_prepared,
-            robots,
-            epoch,
-            cfg,
-            seeds=seeds if epoch == 0 else None,
-            verify_extraction=verify_extraction,
-            sitemap_hints=sitemap_hints,
-            dust_rules=dust_rules,
-            mirror_loser_hosts=mirror_dim,
+        out.append(
+            run_epoch(
+                spark,
+                cat,
+                pages_prepared,
+                robots,
+                epoch,
+                cfg,
+                seeds=seeds if epoch == 0 else None,
+                verify_extraction=verify_extraction,
+                sitemap_hints=sitemap_hints,
+            )
         )
-        tele.adopt(counters.pop("_telemetry")["sections"])
-        out.append(counters)
-        if cfg.collapse_mirrors:
-            # re-mine from ALL accumulated evidence; the dim engages next
-            # epoch (same cadence discipline as DUST below). Checkpointed
-            # once — the count below AND next epoch's gate read the cached
-            # blocks instead of re-running the pair-generation join.
-            mined = _mine_mirror_losers(cat, epoch, cfg)
-            if mined is not None:
-                mirror_dim, mirror_ids = _checkpoint_dim(spark, mined, mirror_ids)
-                counters["mirror_loser_hosts"] = mirror_dim.count()
-            tele.mark("mine_mirrors")
-        if cfg.mine_dust:
-            # re-mine from ALL accumulated evidence (fetch_digests deltas);
-            # at 10^10 this job is two hash-aggs over (url_norm, content_
-            # hash) projections — run it on the same cadence as compaction
-            # if per-epoch is too hot. Rules engage next epoch; checkpointed
-            # once so the count and next epoch's ingest share the blocks.
-            mined = _mine_dust_rules(cat, epoch, cfg)
-            if mined is not None:
-                dust_rules, dust_ids = _checkpoint_dim(spark, mined, dust_ids)
-                counters["dust_rule_hosts"] = dust_rules.count()
-            tele.mark("mine_dust")
-        # periodic delta compaction (Iceberg rewrite_data_files cadence):
-        # the seen/links unions otherwise read one directory per prior epoch;
-        # the frontier (merge table) additionally re-resolves superseded
-        # status rows on every read until compacted. The postings deltas are
-        # on the same cadence: with build_index on, a year of hourly epochs
-        # is otherwise ~9k directories under every BM25 query.
-        if cfg.compact_every and (epoch + 1) % cfg.compact_every == 0:
-            tables = ["seen", "links", "frontier"]
-            if cfg.build_index:
-                tables.append("postings")
-            if cfg.mine_dust or cfg.collapse_mirrors:
-                tables.append("fetch_digests")
-            for table in tables:
-                counters.setdefault("maintenance", {})[f"compact_{table}"] = (
-                    cat.compact_delta(table, epoch)
-                )
-            tele.mark("compact")
-        # non-semantic telemetry under ONE underscore key: the crawl's
-        # counters are a deterministic function of the inputs (pinned by the
-        # two-run compose test); wall clock and scheduler ids are not
-        counters["_telemetry"] = tele.record()
     if owns_pages:
         pages_prepared.unpersist()
-    _unpersist_ids(spark, dust_ids | mirror_ids)
     return out
